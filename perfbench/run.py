@@ -5,12 +5,12 @@
 
 Run from the repository root. Set-up (JVM start, seeded inputs, warm-up
 units) is timed as ``setup_s``; then units of work run until ``--seconds``
-have passed and the workload's ``min_units`` have run, each timed and
-output-checked. The last stdout line is one
+have passed, each timed and output-checked. The last stdout line is one
 JSON object: ``correct``, ``attempted``, ``failed`` and ``metrics``.
 ``--trace 0`` reports the end-to-end metrics; ``--trace 1`` alternates
 untraced and traced units and reports the per-layer metrics instead, and
-writes the spans to ``--trace-out``. See README.md in this directory.
+writes the spans to ``.perfbench_out/<workload>-<seed>.json``. See
+README.md in this directory.
 """
 
 from __future__ import annotations
@@ -30,7 +30,8 @@ import traceback
 T_START = time.perf_counter()
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-WARMUP_UNITS = 1
+# metrics only the stream workload can move; no other workload emits them
+STREAM_ONLY = "stream."
 
 
 def log(*args):
@@ -195,9 +196,9 @@ class Runner:
         self.attempted = self.failed = 0
 
     def unit(self, traced: bool = False):
-        """One unit, timed and checked: (wall_s, first_result_s), or None
-        when it raised. A unit that fails its check is timed and counted
-        in ``failed``."""
+        """One unit, timed and checked: (wall_s, first_result_s or None),
+        or None when it raised. A unit that fails its check is timed and
+        counted in ``failed``."""
         self.attempted += 1
         tr = self.tracer if traced else None
         try:
@@ -223,8 +224,7 @@ class Runner:
         log(f"unit {'traced ' if traced else ''}{t1 - t0:.3f}s "
             f"(host steal {cpu_steal_s() - steal0:.2f}s) "
             f"{'ok' if ok else 'output check FAILED'}: {detail}")
-        first = res.get("first_result_s", t1 - t0) if isinstance(res, dict) else t1 - t0
-        return t1 - t0, first
+        return t1 - t0, res.get("first_result_s") if isinstance(res, dict) else None
 
 
 def stream_extras(progress: list, n_units: int) -> dict:
@@ -260,13 +260,11 @@ def ratios(tr) -> dict:
 
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
-    ap.add_argument("--workload", required=True, choices=["build", "stream", "query", "canon"])
+    ap.add_argument("--workload", required=True, choices=["build", "graph", "stream", "query", "canon"])
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--size", choices=["full", "tiny"], default="full")
-    ap.add_argument("--trace-out", default=None,
-                    help="span JSON path (default .perfbench_out/<workload>-<seed>.json)")
     args = ap.parse_args(argv)
 
     if not os.path.isdir(os.path.join(ROOT, "kgcompass_spark")):
@@ -292,25 +290,25 @@ def main(argv=None) -> int:
         tracer = tracing.Tracer(spark, host["nproc"]) if args.trace else None
         runner = Runner(wl, tracer)
         wl.setup()
-        for _ in range(WARMUP_UNITS):
+        for _ in range(wl.warmup_units):
             runner.unit()
         setup_s = time.perf_counter() - T_START
 
         sampler.reset()
         steal0, gc0 = cpu_steal_s(), jvm_gc_s(spark)
         walls, firsts, traced_walls = [], [], []
-        t_measure, n = time.perf_counter(), 0
+        t_measure = time.perf_counter()
         while True:
-            n += 1
             r = runner.unit()
             if r:
                 walls.append(r[0])
-                firsts.append(r[1])
+                if r[1] is not None:
+                    firsts.append(r[1])
             if tracer is not None:
                 r = runner.unit(traced=True)
                 if r:
                     traced_walls.append(r[0])
-            if time.perf_counter() - t_measure >= args.seconds and n >= wl.min_units:
+            if time.perf_counter() - t_measure >= args.seconds:
                 break
         peak_rss_mb = sampler.peak / (1024 * 1024)
         noise = {"steal_s": cpu_steal_s() - steal0, "gc_s": jvm_gc_s(spark) - gc0}
@@ -330,9 +328,10 @@ def main(argv=None) -> int:
         metrics = {
             "setup_s": (setup_s, "s"),
             "wall_s": (wall_s, "s"),
-            "first_result_s": (statistics.median(firsts) if firsts else 0.0, "s"),
             "peak_rss_mb": (peak_rss_mb, "MB"),
         }
+        if firsts:
+            metrics["first_result_s"] = (statistics.median(firsts), "s")
     else:
         metrics = {}
         per_layer = tracer.layer_metrics()
@@ -340,16 +339,16 @@ def main(argv=None) -> int:
             unit = name.rsplit(".", 1)[1]
             metrics[name] = (value, {"wall_s": "s", "task_s": "s", "idle_core_s": "s",
                                      "shuffle_mb": "MB", "spill_mb": "MB"}.get(unit, "count"))
-        for w in workloads.WORKLOADS:
-            mine = w == args.workload
-            metrics[f"{w}.tasks_failed"] = (tracer.failed_tasks() if mine else 0, "count")
-            metrics[f"{w}.trace_overhead_s"] = (tracer.traced_wall_s() - wall_s if mine else 0.0, "s")
-            metrics[f"{w}.unattributed_s"] = (tracer.unattributed_s() if mine else 0.0, "s")
+        metrics["tasks_failed"] = (tracer.failed_tasks(), "count")
+        metrics["trace_overhead_s"] = (tracer.traced_wall_s() - wall_s, "s")
+        metrics["unattributed_s"] = (tracer.unattributed_s(), "s")
         for name, value in stream_extras(tracer.stream_progress, len(tracer.units)).items():
             metrics[name] = (value, "s" if name.endswith("_s") else "count")
         for name, value in ratios(tracer).items():
             metrics[name] = (value, "ratio")
-        out = args.trace_out or os.path.join(ROOT, ".perfbench_out", f"{args.workload}-{args.seed}.json")
+        if args.workload != "stream":
+            metrics = {k: v for k, v in metrics.items() if not k.startswith(STREAM_ONLY)}
+        out = os.path.join(ROOT, ".perfbench_out", f"{args.workload}-{args.seed}.json")
         os.makedirs(os.path.dirname(out), exist_ok=True)
         tracer.dump(out, {"host": host, "traced_wall_s": tracer.traced_wall_s(),
                           "untraced_wall_s": walls, "metrics": {k: v[0] for k, v in metrics.items()}})
