@@ -110,11 +110,6 @@ PREDICATE_INVERSE: dict[str, str] = {
     "calls method": "called by method",
 }
 
-NODE_KINDS = (
-    "issue", "method", "class", "file", "directory",
-    "commit", "experience", "documentation",
-)
-
 # ---------------------------------------------------------------------------
 # Noise-filter tables (fl.py:66-100) — drop junk mentions before linking.
 # ---------------------------------------------------------------------------
@@ -142,21 +137,6 @@ NOISY_DUNDER_REFERENCES = frozenset({
 GENERIC_BASENAME_REFERENCES = frozenset({
     "__init__", "base", "common", "compat", "conf", "config", "conftest",
     "core", "io", "test", "tests", "ui", "utils",
-})
-
-NON_SOURCE_FILE_EXTENSIONS = frozenset({
-    ".cfg", ".csv", ".html", ".ini", ".json", ".md", ".rst", ".toml", ".txt",
-    ".xml", ".yaml", ".yml",
-})
-
-LOCAL_OR_STDLIB_QUALIFIED_PREFIXES = frozenset({
-    "c", "cls", "df", "filepath", "np", "numpy", "os", "pd", "platform",
-    "self", "sys", "tbl", "u",
-})
-
-GENERIC_QUALIFIED_TARGETS = frozenset({
-    "append", "count", "format", "lower", "open", "platform", "read",
-    "version", "transform", "write",
 })
 
 # Mention-extraction stopwords (utils.py:612 EXCLUDE_PATTERNS)
@@ -187,7 +167,5 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # unbounded O(len²) per pair is a scale-killer, and similarity beyond the
 # first ~2k chars is noise for ranking (deviation, documented)
 MAX_SIMILARITY_TEXT_CHARS = 2000
-SKEW_SALT_BUCKETS = 8          # salting factor for hot mention tokens
 MINHASH_NUM_HASHES = 32
 MINHASH_BANDS = 8              # 8 bands x 4 rows
-SIMHASH_BITS = 64

@@ -111,10 +111,3 @@ def split_identifier(col: Column) -> Column:
     c = F.regexp_replace(c, r"[_\.\-/]+", " ")
     toks = F.split(F.lower(F.trim(c)), r"\s+")
     return F.filter(toks, lambda t: F.length(t) >= 3)
-
-
-def stable_id(*cols: Column) -> Column:
-    """P13: deterministic 16-hex entity id — sha2 over ':'-joined parts
-    (reference uses sha1[:12] at fl.py:2308; we widen to 16 hex of sha256
-    for collision headroom at 10^12 docs)."""
-    return F.substring(F.sha2(F.concat_ws(":", *cols), 256), 1, 16)

@@ -647,25 +647,6 @@ def _mask_strings_comments(src: str) -> str:
     return "".join(out)
 
 
-def _brace_end_line(source: str, open_pos: int) -> int:
-    """Line of the brace matching the first '{' at/after ``open_pos``.
-    Callers pass the string/comment-MASKED source (see
-    ``_mask_strings_comments``), so literal braces can't skew the depth."""
-    start = source.find("{", open_pos)
-    if start == -1:
-        return _line_of(source, open_pos)
-    depth = 0
-    for i in range(start, len(source)):
-        c = source[i]
-        if c == "{":
-            depth += 1
-        elif c == "}":
-            depth -= 1
-            if depth == 0:
-                return _line_of(source, i)
-    return _line_of(source, len(source) - 1)
-
-
 def _brace_span_end(source: str, open_pos: int) -> int:
     """Char index of the brace matching the first '{' at/after
     ``open_pos``. Callers pass the string/comment-MASKED source."""

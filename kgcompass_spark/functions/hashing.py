@@ -20,8 +20,3 @@ from pyspark.sql import functions as F
 def md5_60(col) -> Column:
     """60-bit positive bigint from md5 — reproducible in DuckDB."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def md5_60_sql(expr: str) -> str:
-    """The DuckDB expression computing the same value as :func:`md5_60`."""
-    return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"

@@ -64,11 +64,6 @@ def extract_text_from_html(raw: bytes | str | None) -> str:
 
 
 @F.pandas_udf(StringType())
-def html_to_text_udf(html: pd.Series) -> pd.Series:
-    return html.map(extract_text_from_html)
-
-
-@F.pandas_udf(StringType())
 def page_text_udf(html: pd.Series, text: pd.Series) -> pd.Series:
     """Prefer pre-extracted text; decode html only where text is absent.
     The branch lives INSIDE the UDF because Catalyst evaluates a UDF column
@@ -85,16 +80,3 @@ def page_text(html_col: Column, text_col: Column) -> Column:
     """Pre-extracted ``text`` when present, else HTML→text extraction
     (FIXTURES.md §1: text may be null)."""
     return page_text_udf(html_col, text_col)
-
-
-# Sentence segmentation (north_star: "sentence segmentation in vectorized
-# Arrow UDFs"). Deterministic rule-based splitter — a Catalyst-only split on
-# sentence-final punctuation followed by whitespace + capital/start.
-def sentences(text_col: Column) -> Column:
-    """array<string> of trimmed sentences. JVM-side regex split (no UDF):
-    split on ``[.!?]`` + whitespace lookahead; keeps abbreviations crude but
-    deterministic."""
-    arr = F.split(text_col, r"(?<=[.!?])\s+(?=[A-Z`#\"'(\[])")
-    return F.filter(
-        F.transform(arr, lambda s: F.trim(s)), lambda s: F.length(s) > 0
-    )

@@ -63,7 +63,6 @@ CLASSNAME_PATTERN = r"\b[A-Z][a-zA-Z_]{2,}\b"
 TRACEBACK_PATTERN = (
     r"File\s+\"([^\"]+?\.py)\",?\s*line\s+(\d+),?\s+in\s+([^\s\(]+)"
 )
-TRACEBACK_ALT_PATTERN = r"([\w/\.\-]+?\.py):(\d+):?\s+in\s+([\w.<>]+)"
 
 # M8 — Sphinx symbols :func:`x.y` etc (fl.py:124-126)
 SPHINX_PATTERN = r":(?:func|meth|class|mod|attr|obj|data|exc):`([^`]+)`"
@@ -225,38 +224,6 @@ def anchor_terms(title: Column, body: Column) -> Column:
     )
     return F.array_distinct(
         F.transform(F.concat(ticked, idents), lambda t: F.lower(t))
-    )
-
-
-def extract_all_mentions(text: Column) -> Column:
-    """Full M1–M10 battery → ranked, truncated, noise-filtered mention array.
-
-    Single-expression form. NOTE: the M4 subtree appears three times in
-    this tree; inside one projection Catalyst does not CSE across the
-    branches, so prefer :func:`mentions_dataframe` (stepwise projections,
-    each subtree evaluated once) in the pipeline hot path — it is ~3×
-    faster. This form is kept for tests and ad-hoc use.
-    """
-    m4 = noise_filter(inline_identifier_mentions(text))
-    identifiers = F.array_distinct(
-        F.concat(
-            m4,
-            classname_fallback_mentions(text, m4),
-            doc_symbol_mentions(text),
-        )
-    )
-    # The noise filter (M10) applies to identifier mentions only — file
-    # paths and issue refs have their own shapes and bypass it, as in the
-    # reference (separate extraction flows, fl.py:1331-1386 vs 1787-1841).
-    structural = F.array_distinct(
-        F.concat(
-            file_path_mentions(text),
-            issue_number_mentions(text),
-            closing_ref_mentions(text),
-        )
-    )
-    return rank_and_truncate(
-        F.concat(structural, noise_filter(identifiers))
     )
 
 

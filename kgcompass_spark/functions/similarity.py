@@ -4,7 +4,9 @@
   P10 Levenshtein similarity  — builtin, normalized              knowledge_graph.py:666
   P11 cosine similarity       — JVM higher-order fns over array<float>
                                  (zip_with + aggregate; no Python)  embedding.py:141-147
-  G4  mixed score             — (cos*W + lev*(1-W)) * DECAY^dist  knowledge_graph.py:1140-1148
+
+The G4 blend of these, (cos*W + lev*(1-W)) * DECAY^dist
+(knowledge_graph.py:1140-1148), is ``plans/related.py:_blend``.
 """
 
 from __future__ import annotations
@@ -14,8 +16,6 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
-
-from ..config import DECAY_FACTOR, VECTOR_SIMILARITY_WEIGHT
 
 
 def levenshtein_similarity(a: Column, b: Column) -> Column:
@@ -85,14 +85,3 @@ def lcs_similarity_udf(a: pd.Series, b: pd.Series) -> pd.Series:
         m = max(len(x), len(y))
         out.append(lcs_len(x, y) / m if m else 1.0)
     return pd.Series(out, dtype="float64")
-
-
-def mixed_score(cos: Column, lev: Column, dist: Column) -> Column:
-    """G4: ``(cos*W + lev*(1-W)) * DECAY^dist`` (knowledge_graph.py:1140-1148)."""
-    w = F.lit(VECTOR_SIMILARITY_WEIGHT)
-    return (cos * w + lev * (1.0 - w)) * F.pow(F.lit(DECAY_FACTOR), dist)
-
-
-def issue_score(cos: Column, dist: Column) -> Column:
-    """G4 issue variant: ``cos * DECAY^dist``."""
-    return cos * F.pow(F.lit(DECAY_FACTOR), dist)

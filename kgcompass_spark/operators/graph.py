@@ -3,8 +3,13 @@
   G2/G3 bounded_sssp      — ≤max_hops rounds of frontier ⋈ edges with
                             min-cost agg and path-struct accumulation
                             (knowledge_graph.py:1054-1138 semantics)
-  G6    pagerank          — root-seeded power iteration (α=0.85)
-                            (knowledge_graph.py:1288-1345)
+  G2    bounded_sssp_multi — the same rounds for many roots in one job
+  A4/A5 seeded_support    — support over all shortest paths and the
+                            lexicographically smallest best paths
+  G6    pagerank          — (personalized) power iteration (α=0.85)
+                            (knowledge_graph.py:1288-1345); the candidate-
+                            path graph rank ``candidate_graph_rank`` runs
+                            the same kernel with teleport 1
   G8    connected_components — delta-frontier min-label propagation with
                             double pointer jumping, the canonicalization CC
                             required at web scale (north_rule)
@@ -712,6 +717,49 @@ def connected_components(
     return out
 
 
+def _power_iteration(
+    e: DataFrame, seed: DataFrame, alpha: float, iters: int
+) -> DataFrame:
+    """The one power-iteration kernel behind ``candidate_graph_rank`` and
+    ``pagerank``. ``e``: (src, dst), checkpointed by the caller; ``seed``:
+    (node, rank0, teleport) over every node. Per round rank =
+    (1-α)·teleport + α·Σ rank(src)/outdeg(src) — one shuffle (groupBy
+    dst) — and ranks are checkpointed every 6 rounds to cut lineage.
+
+    Returns (node, score), normalized by the max rank."""
+    out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
+    ranks = seed.select("node", F.col("rank0").alias("rank"))
+    for i in range(iters):
+        contribs = (
+            ranks.join(e, ranks["node"] == e["src"])
+            .join(out_deg, "src")
+            .select(F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
+            .groupBy("node")
+            .agg(F.sum("c").alias("inflow"))
+        )
+        ranks = seed.join(contribs, "node", "left").select(
+            "node",
+            (
+                (1.0 - alpha) * F.col("teleport")
+                + alpha * F.coalesce(F.col("inflow"), F.lit(0.0))
+            ).alias("rank"),
+        )
+        if (i + 1) % 6 == 0:
+            ranks = ranks.localCheckpoint(eager=True)
+    mx = ranks.agg(F.max("rank")).first()[0] or 1.0
+    return ranks.select("node", (F.col("rank") / F.lit(mx)).alias("score"))
+
+
+def _nodes_of(e: DataFrame) -> DataFrame:
+    """Distinct endpoints of (src, dst), checkpointed: every round joins it."""
+    return (
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
 def candidate_graph_rank(
     edges: DataFrame,
     root: str,
@@ -722,45 +770,19 @@ def candidate_graph_rank(
     (knowledge_graph.py:1289-1345 ``_compute_unsupervised_graph_rank_scores``):
     power iteration over the CANDIDATE-PATH subgraph (directed consecutive
     pairs of every candidate's path node sequence), rank₀ = 1 at root else
-    0, per iteration rank = (1-α) + α·Σ rank(src)/outdeg(src), normalized
-    by max (A7). The input is bounded by the candidate cap (≤ cap ×
-    max_hops edges), so the per-iteration shuffles are small.
+    0, teleport 1, so per iteration rank = (1-α) + α·Σ rank(src)/outdeg(src),
+    normalized by max (A7). The input is bounded by the candidate cap (≤ cap
+    × max_hops edges), so the per-iteration shuffles are small.
 
     Returns (node, score) with score in [0, 1].
     """
     e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    ranks = nodes.select(
+    seed = _nodes_of(e).select(
         "node",
-        F.when(F.col("node") == root, F.lit(1.0)).otherwise(F.lit(0.0)).alias("rank"),
+        F.when(F.col("node") == root, F.lit(1.0)).otherwise(F.lit(0.0)).alias("rank0"),
+        F.lit(1.0).alias("teleport"),
     )
-    for i in range(iters):
-        contribs = (
-            ranks.join(e, ranks["node"] == e["src"])
-            .join(out_deg, "src")
-            .select(
-                F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c")
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = nodes.join(contribs, "node", "left").select(
-            "node",
-            (
-                F.lit(1.0 - alpha)
-                + alpha * F.coalesce(F.col("inflow"), F.lit(0.0))
-            ).alias("rank"),
-        )
-        if (i + 1) % 6 == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    mx = ranks.agg(F.max("rank")).first()[0] or 1.0
-    return ranks.select("node", (F.col("rank") / F.lit(mx)).alias("score"))
+    return _power_iteration(e, seed, alpha, iters)
 
 
 def pagerank(
@@ -770,54 +792,22 @@ def pagerank(
     personalized_root: str | None = None,
 ) -> DataFrame:
     """G6: (personalized) PageRank by power iteration, normalized by max
-    (knowledge_graph.py:1288-1345: α=0.85, 24 iterations, root-seeded).
+    (knowledge_graph.py:1288-1345: α=0.85, 24 iterations, root-seeded):
+    rank₀ = teleport = base, where base is 1 at ``personalized_root`` else
+    0, or 1/|nodes| without a root.
 
-    Returns (node, score). Per iteration one shuffle (groupBy dst); ranks
-    checkpointed every 5 rounds to cut lineage. The edge list is
-    localCheckpoint-ed once up front (mirroring candidate_graph_rank /
-    bounded_sssp / connected_components): the loop body joins `e` every
-    iteration, and without the checkpoint each of the 24 iterations would
-    re-evaluate the full upstream triple pipeline.
+    Returns (node, score). The edge list is localCheckpoint-ed once up
+    front (mirroring bounded_sssp / connected_components): the loop body
+    joins it every iteration, and without the checkpoint each iteration
+    would re-evaluate the full upstream triple pipeline.
     """
     e = edges.select(
         F.col("subj").alias("src"), F.col("obj").alias("dst")
     ).localCheckpoint(eager=True)
-    nodes = e.select(F.col("src").alias("node")).unionByName(
-        e.select(F.col("dst").alias("node"))
-    ).distinct().localCheckpoint(eager=True)
-    out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    n_nodes = nodes.count()
-
+    nodes = _nodes_of(e)
     if personalized_root is not None:
-        base = nodes.select(
-            "node",
-            F.when(F.col("node") == personalized_root, F.lit(1.0))
-            .otherwise(F.lit(0.0))
-            .alias("base"),
-        )
+        base = F.when(F.col("node") == personalized_root, F.lit(1.0)).otherwise(F.lit(0.0))
     else:
-        base = nodes.select("node", F.lit(1.0 / n_nodes).alias("base"))
-
-    ranks = base.select("node", F.col("base").alias("rank"))
-    for i in range(iters):
-        contribs = (
-            ranks.join(e, ranks["node"] == e["src"])
-            .join(out_deg, "src")
-            .select(F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = (
-            base.join(contribs, "node", "left")
-            .select(
-                "node",
-                (
-                    (1.0 - alpha) * F.col("base")
-                    + alpha * F.coalesce(F.col("inflow"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % 5 == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    mx = ranks.agg(F.max("rank")).first()[0] or 1.0
-    return ranks.select("node", (F.col("rank") / F.lit(mx)).alias("score"))
+        base = F.lit(1.0 / nodes.count())
+    seed = nodes.select("node", base.alias("rank0"), base.alias("teleport"))
+    return _power_iteration(e, seed, alpha, iters)

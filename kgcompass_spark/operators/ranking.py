@@ -1,10 +1,14 @@
-"""Ranking & export operators (SURVEY.md §2.7–2.8, §3.2).
+"""Evidence rerank operators (SURVEY.md §2.8, §3.2).
 
-  A4/A5 evidence support aggregation + best-path selection
-        (export_kg_evidence_graph.py:234-246)
-  T2    per-type ranked truncation (knowledge_graph.py:1266-1273)
-  T4    lexicographic rerank (export_kg_evidence_graph.py:163-194)
-  T7    final export split + cap at SEARCH_SPACE
+  T4    lexicographic 10-key rerank (export_kg_evidence_graph.py:163-194):
+        ``rank_evidence_full`` for one root, ``rank_evidence_full_all``
+        per root in one job, with the issue anchor terms they score
+        against (``issue_anchor_terms``)
+  node_type_from_id — the entity kind prefix of a node id
+
+Support aggregation and best-path selection (A4/A5) are
+``operators/graph.py:seeded_support``; the per-type truncation (T2) and
+the final SEARCH_SPACE cap (T7) are applied in ``plans/evidence.py``.
 
 The evidence-graph mode is embedding-free and fully deterministic
 (kg_params.uses_embeddings = False in the reference export) — every window
@@ -15,73 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from ..config import SEARCH_SPACE
-
-
-def evidence_support(paths: DataFrame) -> DataFrame:
-    """A4: group root→target paths by target.
-
-    ``paths``: (node, cost, hops, path) from bounded_sssp, where
-    path[0].node is the first-hop seed. Emits per target:
-    min distance, support (= distinct first-hop seeds), best path (A5:
-    lexicographically smallest among min-hop paths).
-    """
-    enriched = paths.filter(F.size("path") > 0).select(
-        "node",
-        "cost",
-        "hops",
-        "path",
-        F.element_at(F.col("path"), 1)["node"].alias("seed"),
-        F.col("path").cast("string").alias("path_key"),
-    )
-    agg = enriched.groupBy("node").agg(
-        F.min("hops").alias("distance"),
-        F.min("cost").alias("min_cost"),
-        F.countDistinct("seed").alias("support"),
-    )
-    w = Window.partitionBy("node").orderBy(F.asc("hops"), F.asc("path_key"))
-    best = (
-        enriched.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("node", F.col("path").alias("best_path"))
-    )
-    return agg.join(best, "node")
-
-
-def rank_evidence(
-    support: DataFrame,
-    anchors: DataFrame | None = None,
-    precap: int | None = None,
-) -> DataFrame:
-    """T4-style deterministic ordering: support desc, distance asc,
-    anchor desc, node asc (export_kg_evidence_graph.py:269-273).
-
-    ``anchors``: optional (node, anchor boolean) — e.g. 1-hop file matches.
-    ``precap``: bound the candidate set with orderBy+limit (TakeOrdered —
-    per-partition top-k, never a global sort) BEFORE the rank window, the
-    reference's 10,000-candidate cap (knowledge_graph.py:1177). Defaults to
-    ``SIMILARITY_CANDIDATE_CAP``; pass None only for provably-small inputs
-    — the window below is partition-less and would single-task-sort an
-    uncapped input at scale.
-    """
-    if precap is None:
-        precap = SIMILARITY_CANDIDATE_CAP
-    df = support
-    if anchors is not None:
-        df = df.join(anchors, "node", "left").withColumn(
-            "anchor", F.coalesce(F.col("anchor"), F.lit(False))
-        )
-    else:
-        df = df.withColumn("anchor", F.lit(False))
-    order = [
-        F.desc("support"),
-        F.asc("distance"),
-        F.desc("anchor"),
-        F.asc("node"),
-    ]
-    df = df.orderBy(*order).limit(precap)
-    return df.withColumn("rank", F.row_number().over(Window.orderBy(*order)))
 
 
 # Export-rerank stopwords (export_kg_evidence_graph.py:40-80 _STOPWORDS)
@@ -196,7 +133,8 @@ def rank_evidence_full(
       7. boilerplate asc (non-boilerplate first)
       8. file_path asc   9. start_line asc   10. name asc
 
-    ``support``: (node, distance, support[, anchor]) from evidence_support;
+    ``support``: (node, distance, support[, anchor]) — the capped export
+    candidates (``plans/evidence.py``, over ``seeded_support``);
     ``entities``: inventory giving (entity_id, name, signature, file_path,
     start_line). All counting is JVM-side array intersections against the
     issue-term literals."""
@@ -329,22 +267,6 @@ def _with_rerank_counts(df: DataFrame, exact_col, lex_col) -> DataFrame:
             F.size(F.array_intersect(lex_col, _candidate_lexical_terms(*cand_fields))),
         )
         .withColumn("boilerplate", _is_boilerplate(F.col("name"), F.col("file_path")))
-    )
-
-
-def per_type_topk(
-    ranked: DataFrame,
-    type_col: str = "entity_type",
-    order_cols: list | None = None,
-    k: int = SEARCH_SPACE,
-) -> DataFrame:
-    """T2/T7: per-type ranked truncation — row_number ≤ k within each
-    entity type, full deterministic key."""
-    order_cols = order_cols or [F.desc("support"), F.asc("distance"), F.asc("node")]
-    w = Window.partitionBy(type_col).orderBy(*order_cols)
-    return (
-        ranked.withColumn("type_rank", F.row_number().over(w))
-        .filter(F.col("type_rank") <= k)
     )
 
 

@@ -66,9 +66,8 @@ def prepare_pages(pages: DataFrame, cutoff: datetime | None = None) -> DataFrame
 
 def extract_mentions(prepared: DataFrame) -> DataFrame:
     """Stage 2: mention battery (M1–M10) → exploded mention rows.
-
-    Uses the stepwise-projection form so each regex sub-battery runs once
-    per page (the single-expression form re-evaluates M4 three times)."""
+    ``mentions_dataframe``'s stepwise projections run each regex
+    sub-battery once per page."""
     return (
         mentions_dataframe(prepared.select("url", "warc_ts", "clean_text"))
         .select("url", "warc_ts", F.explode("mentions").alias("m"))
@@ -110,6 +109,34 @@ def pages_meta_from(prepared: DataFrame) -> DataFrame:
         "warc_ts",
         F.regexp_extract(F.col("url"), r"/(\d+)$", 1).alias("doc_key"),
     ).filter(F.col("doc_key") != "")
+
+
+def link_stage(
+    pages: DataFrame,
+    entities: DataFrame,
+    cutoff: datetime | None = None,
+    persist: bool = False,
+) -> dict[str, DataFrame]:
+    """Stages 1–3, shared by ``build_kg`` and the streaming micro-batch:
+    prepared pages → mentions + traceback frames → links. Returns
+    ``prepared``, ``mentions``, ``frames`` and ``links`` (lazy).
+
+    ``persist=True`` caches ``prepared`` and ``mentions``: the link
+    resolvers all re-derive them otherwise, so the HTML→text Arrow UDF, the
+    page-dedup shuffle and the regex battery would each run once per
+    resolver (observed in the physical plan). On a cluster this is the
+    difference between one and five scans of the 100-TB pages table.
+    Caller owns unpersist.
+    """
+    prepared = prepare_pages(pages, cutoff)
+    if persist:
+        prepared = prepared.persist()
+    mentions = extract_mentions(prepared)
+    if persist:
+        mentions = mentions.persist()
+    frames = extract_frames(prepared)
+    links = link_all(mentions, frames, entities, pages_meta_from(prepared))
+    return {"prepared": prepared, "mentions": mentions, "frames": frames, "links": links}
 
 
 def build_kg_from_sources(
@@ -161,11 +188,8 @@ def build_kg(
     artifacts; when supplied, the commit / repair-experience / documentation
     link stages run too (operators/context.py) — all 17 predicate pairs.
 
-    ``persist=True`` caches the prepared-pages stage: the five link
-    resolvers all re-derive it otherwise, so the HTML→text Arrow UDF and the
-    page-dedup shuffle would run 5× (observed in the physical plan). On a
-    cluster this is the difference between one and five scans of the 100-TB
-    pages table. Caller owns unpersist.
+    ``persist=True`` caches the prepared pages and the mentions (see
+    ``link_stage``). Caller owns unpersist.
 
     ``canonicalize=True`` appends the north-rule canonicalization stage
     (``operators/canonicalize.py``): entity spelling variants merge via CC
@@ -180,18 +204,9 @@ def build_kg(
     capped vocabulary-prune collect (``operators/context.py``); both are
     bounded by their limits regardless of corpus size.
     """
-    prepared = prepare_pages(pages, cutoff)
-    if persist:
-        prepared = prepared.persist()
-    mentions = extract_mentions(prepared)
-    if persist:
-        # five resolvers consume mentions — uncached they would each re-run
-        # the regex battery over every page
-        mentions = mentions.persist()
-    frames = extract_frames(prepared)
-    meta = pages_meta_from(prepared)
-    links = link_all(mentions, frames, entities, meta)
-    triples = links_to_triples(links).unionByName(
+    out = link_stage(pages, entities, cutoff, persist)
+    prepared = out["prepared"]
+    triples = links_to_triples(out["links"]).unionByName(
         structural_triples(entities).select(
             "subj", "predicate", "obj", "weight", "src_url"
         )
@@ -236,13 +251,7 @@ def build_kg(
         triples = canonicalize_triples(triples, canonical)
     if include_reverse:
         triples = with_reverse_edges(triples)
-    out = {
-        "prepared": prepared,
-        "mentions": mentions,
-        "frames": frames,
-        "links": links,
-        "triples": triples,
-    }
+    out["triples"] = triples
     if canonical is not None:
         out["canonical_mapping"] = canonical
     return out

@@ -31,12 +31,7 @@ from ..config import (
     STRONG_CONNECTION,
     VECTOR_SIMILARITY_WEIGHT,
 )
-from ..functions.similarity import (
-    cosine_similarity,
-    issue_score,
-    levenshtein_similarity,
-    mixed_score,
-)
+from ..functions.similarity import cosine_similarity, levenshtein_similarity
 from ..operators.graph import bounded_sssp, bounded_sssp_multi
 from ..operators.ranking import node_type_from_id
 from ..operators.triples import with_reverse_edges
@@ -76,33 +71,7 @@ def _related_candidates(
     )
     rounds = min(int(math.ceil(max_cost / STRONG_CONNECTION)), 8)
     paths = bounded_sssp_multi(edges, roots, max_hops=rounds, max_cost=max_cost)
-    typed = paths.filter(F.col("node") != F.col("root")).withColumn(
-        "entity_type", node_type_from_id(F.col("node"))
-    )
-    class_with_methods = (
-        triples.filter(F.col("predicate") == "contains method")
-        .select(F.col("subj").alias("node"))
-        .distinct()
-    )
-    typed = (
-        typed.filter(F.col("entity_type").isin("method", "class", "issue"))
-        .join(
-            F.broadcast(class_with_methods.withColumn("_has_m", F.lit(True))),
-            "node",
-            "left",
-        )
-        .filter((F.col("entity_type") != "class") | F.col("_has_m").isNull())
-        .drop("_has_m")
-    )
-    meta = entities.select(
-        F.col("entity_id").alias("node"), "name", "signature",
-        F.col("doc_string").alias("doc_string"), "file_path",
-    )
-    df = typed.join(F.broadcast(meta), "node", "left").filter(
-        (F.col("entity_type") != "method")
-        | ~F.coalesce(F.col("name"), F.lit("")).contains("test")
-        | F.coalesce(F.col("name"), F.lit("")).contains("pytest")
-    )
+    df = _ranking_targets(paths, F.col("root"), triples, entities)
     # node texts: entity signature+docstring; issue body. EMBEDDINGS ARE
     # FACTORED PER DISTINCT NODE AND PER ROOT, not per (root, node) pair —
     # the pair table is |roots| × |reachable|, so a per-row UDF there runs
@@ -167,6 +136,43 @@ def _related_candidates(
     return df.withColumn("_cos", cos).withColumn("_lev", lev).select(
         "root", "node", "entity_type", "cost", "hops",
         "name", "file_path", "_rtext", "_cos", "_lev",
+    )
+
+
+def _ranking_targets(
+    paths: DataFrame, root, triples: DataFrame, entities: DataFrame
+) -> DataFrame:
+    """Target filter (knowledge_graph.py:1069-1073) over shortest-path rows:
+    node ≠ ``root`` (a column), methods, LEAF classes (no contained
+    methods) and issues, joined to the entity meta (name, signature,
+    doc_string, file_path), minus test methods (name contains "test" but
+    not "pytest"). Adds ``entity_type``; keeps every ``paths`` column."""
+    typed = paths.filter(F.col("node") != root).withColumn(
+        "entity_type", node_type_from_id(F.col("node"))
+    )
+    class_with_methods = (
+        triples.filter(F.col("predicate") == "contains method")
+        .select(F.col("subj").alias("node"))
+        .distinct()
+    )
+    typed = (
+        typed.filter(F.col("entity_type").isin("method", "class", "issue"))
+        .join(
+            F.broadcast(class_with_methods.withColumn("_has_m", F.lit(True))),
+            "node",
+            "left",
+        )
+        .filter((F.col("entity_type") != "class") | F.col("_has_m").isNull())
+        .drop("_has_m")
+    )
+    meta = entities.select(
+        F.col("entity_id").alias("node"), "name", "signature",
+        F.col("doc_string").alias("doc_string"), "file_path",
+    )
+    return typed.join(F.broadcast(meta), "node", "left").filter(
+        (F.col("entity_type") != "method")
+        | ~F.coalesce(F.col("name"), F.lit("")).contains("test")
+        | F.coalesce(F.col("name"), F.lit("")).contains("pytest")
     )
 
 
@@ -299,8 +305,8 @@ def ranked_related_entities(
     limit: int = 500,
     identifier_boost_weight: float = 0.0,
     evidence_path_boost_weight: float = 0.0,
-    unsup_gnn_mode: str | None = None,
-    unsup_gnn_weight: float | None = None,
+    unsup_gnn_mode: str = "off",
+    unsup_gnn_weight: float = 0.18,
     node_embeddings: DataFrame | None = None,
     root_vec: list | None = None,
 ) -> DataFrame:
@@ -317,51 +323,19 @@ def ranked_related_entities(
     the configured encoder on ``root_text``.
 
     ``unsup_gnn_mode``/``unsup_gnn_weight``: the reference's optional
-    root-seeded graph-rank blend (knowledge_graph.py:1216-1228). None reads
-    the env gates ``KGCOMPASS_SPARK_UNSUP_GNN_MODE`` (default "off" — the
-    reference's default) and ``KGCOMPASS_SPARK_UNSUP_GNN_WEIGHT`` (default
-    0.18). When mode ∈ {pagerank, unsup, gnn}: a ``graph_score`` column is
-    added (candidate-path-subgraph PageRank, max-normalized) and, if the
-    weight is > 0, ``similarity += weight × graph_score``.
+    root-seeded graph-rank blend (knowledge_graph.py:1216-1228), "off" by
+    default like the reference. When mode ∈ {pagerank, unsup, gnn}: a
+    ``graph_score`` column is added (candidate-path-subgraph PageRank,
+    max-normalized) and, if the weight is > 0, ``similarity += weight ×
+    graph_score``.
     """
-    import os
     from ..functions.embedding import embed_text_udf, encode_one
 
     root = f"issue:{root_url}"
     edges = with_reverse_edges(triples)
     rounds = min(int(math.ceil(max_cost / STRONG_CONNECTION)), 8)
     paths = bounded_sssp(edges, root, max_hops=rounds, max_cost=max_cost)
-    typed = paths.filter(F.col("node") != root).withColumn(
-        "entity_type", node_type_from_id(F.col("node"))
-    )
-
-    # target filter (knowledge_graph.py:1069-1073): methods, LEAF classes
-    # (no contained methods), issues ≠ root
-    class_with_methods = (
-        triples.filter(F.col("predicate") == "contains method")
-        .select(F.col("subj").alias("node"))
-        .distinct()
-    )
-    typed = typed.filter(F.col("entity_type").isin("method", "class", "issue")).join(
-        F.broadcast(class_with_methods.withColumn("_has_m", F.lit(True))),
-        "node",
-        "left",
-    ).filter((F.col("entity_type") != "class") | F.col("_has_m").isNull()).drop("_has_m")
-
-    meta = entities.select(
-        F.col("entity_id").alias("node"),
-        "name",
-        "signature",
-        F.col("doc_string").alias("doc_string"),
-        "file_path",
-    )
-    df = typed.join(F.broadcast(meta), "node", "left")
-    # test-method exclusion (knowledge_graph.py:1073)
-    df = df.filter(
-        (F.col("entity_type") != "method")
-        | ~F.coalesce(F.col("name"), F.lit("")).contains("test")
-        | F.coalesce(F.col("name"), F.lit("")).contains("pytest")
-    )
+    df = _ranking_targets(paths, F.lit(root), triples, entities)
 
     # node text: entity signature+docstring (source proxy); issue body text
     ntext = F.concat_ws(" ", F.coalesce("name", F.lit("")), F.coalesce("signature", F.lit("")), F.coalesce("doc_string", F.lit("")))
@@ -395,27 +369,16 @@ def ranked_related_entities(
         F.lit(root_text[:MAX_SIMILARITY_TEXT_CHARS]),
         F.substring(F.col("_ntext"), 1, MAX_SIMILARITY_TEXT_CHARS),
     )
-    base = F.when(
-        F.col("entity_type") == "issue", issue_score(cos, F.col("cost"))
-    ).otherwise(mixed_score(cos, lev, F.col("cost")))
-
-    root_low = root_text.lower()
-    ib = F.lit(float(identifier_boost_weight))
-    name_low = F.lower(F.coalesce(F.col("name"), F.lit("")))
-    basename_low = F.lower(
-        F.element_at(F.split(F.coalesce(F.col("file_path"), F.lit("")), "/"), -1)
+    df = df.withColumn("_cos", cos).withColumn("_lev", lev).withColumn(
+        "_rtext", F.lit(root_text)
     )
-    identifier_boost = F.when(
-        (F.col("entity_type") != "issue") & (F.lit(identifier_boost_weight) > 0),
-        F.when(
-            (F.length(name_low) > 3) & F.lit(root_low).contains(name_low), ib
-        ).otherwise(F.lit(0.0))
-        + F.when(
-            (F.length(basename_low) > 0) & F.lit(root_low).contains(basename_low),
-            ib / 2.0,
-        ).otherwise(F.lit(0.0)),
-    ).otherwise(F.lit(0.0))
 
+    scored = _blend(
+        df,
+        F.lit(float(DECAY_FACTOR)),
+        F.lit(float(VECTOR_SIMILARITY_WEIGHT)),
+        identifier_boost_weight,
+    )
     evidence_boost = F.when(
         (F.lit(evidence_path_boost_weight) > 0)
         & F.exists(
@@ -426,13 +389,8 @@ def ranked_related_entities(
         ),
         F.lit(float(evidence_path_boost_weight)),
     ).otherwise(F.lit(0.0))
+    scored = scored.withColumn("similarity", F.col("similarity") + evidence_boost)
 
-    scored = df.withColumn("similarity", base + identifier_boost + evidence_boost)
-
-    if unsup_gnn_mode is None:
-        unsup_gnn_mode = os.getenv("KGCOMPASS_SPARK_UNSUP_GNN_MODE", "off").lower()
-    if unsup_gnn_weight is None:
-        unsup_gnn_weight = float(os.getenv("KGCOMPASS_SPARK_UNSUP_GNN_WEIGHT", "0.18"))
     out_cols = ["node", "entity_type", "similarity", F.col("cost").alias("distance"), "hops"]
     if unsup_gnn_mode in {"pagerank", "unsup", "gnn"}:
         from ..operators.graph import candidate_graph_rank

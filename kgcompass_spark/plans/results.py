@@ -29,13 +29,6 @@ from pyspark.sql import functions as F
 
 from ..config import DECAY_FACTOR, VECTOR_SIMILARITY_WEIGHT
 
-# field order pinned to the reference's dict literal (knowledge_graph.py:1179)
-_ENT_FIELDS = (
-    "type", "name", "signature", "file_path", "documentation", "source_code",
-    "start_line", "end_line", "issue_id", "title", "content",
-    "similarity", "distance", "graph_node_id",
-)
-
 
 def result_documents(
     ranked: DataFrame,

@@ -24,21 +24,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def fingerprint_inputs(*parts) -> str:
-    """Derive a stage fingerprint from input identity (upstream manifest
-    hashes, config values, code version). ``run_stage`` skips recompute when
-    a snapshot with the same fingerprint exists — so the fingerprint MUST
-    change when inputs change, or resume returns stale output. Callers pass
-    whatever identifies the inputs; this hashes the repr to 12 hex chars."""
-    import hashlib
-
-    h = hashlib.sha256()
-    for p in parts:
-        h.update(repr(p).encode("utf-8"))
-        h.update(b"\x00")
-    return h.hexdigest()[:12]
-
-
 def _iceberg_available(spark: SparkSession) -> bool:
     try:
         jvm = spark.sparkContext._jvm
@@ -143,8 +128,9 @@ class StageCatalog:
         back so downstream stages consume the snapshot, not the lineage.
 
         The skip keys purely on ``fingerprint`` — derive it from input
-        identity (see ``fingerprint_inputs``) or bump it when inputs or
-        code change; the default 'v1' is only safe for immutable inputs."""
+        identity (upstream manifest hashes, config values, code version) or
+        bump it when inputs or code change, or resume returns stale output;
+        the default 'v1' is only safe for immutable inputs."""
         if not self.has_stage(stage, fingerprint):
             self.write_stage(builder(), stage, fingerprint, bucket_col)
         return self.read_stage(stage, fingerprint)

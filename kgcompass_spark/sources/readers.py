@@ -16,8 +16,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .datagen import PAGES_SCHEMA
-
 # P15: the reference tries these formats in order (fl.py:830-866)
 _TS_FORMATS = (
     "yyyy-MM-dd'T'HH:mm:ss'Z'",

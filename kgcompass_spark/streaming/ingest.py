@@ -152,26 +152,17 @@ def run_triples_stream(
     Returns the stopped StreamingQuery after draining ``input_dir``.
     """
     from ..operators.triples import links_to_triples
-    from ..pipeline import (
-        extract_frames,
-        extract_mentions,
-        link_all,
-        pages_meta_from,
-        prepare_pages,
-    )
+    from ..pipeline import link_stage
 
     deduped = streaming_url_dedup(
         read_pages_stream(spark, input_dir, max_files=max_files), watermark
     )
 
     def emit(batch_df: DataFrame, batch_id: int) -> None:
-        prepared = prepare_pages(batch_df, None).persist()
-        mentions = extract_mentions(prepared)
-        links = link_all(
-            mentions, extract_frames(prepared), entities, pages_meta_from(prepared)
-        )
-        links_to_triples(links).write.mode("append").parquet(out_dir)
-        prepared.unpersist()
+        stage = link_stage(batch_df, entities, persist=True)
+        links_to_triples(stage["links"]).write.mode("append").parquet(out_dir)
+        stage["prepared"].unpersist()
+        stage["mentions"].unpersist()
 
     q = deduped.writeStream.outputMode("append").foreachBatch(emit).start()
     q.processAllAvailable()

@@ -8,7 +8,6 @@ from kgcompass_spark.functions.similarity import (
     cosine_similarity,
     lcs_similarity_udf,
     levenshtein_similarity,
-    mixed_score,
 )
 from kgcompass_spark.operators.linking import best_title_match
 from kgcompass_spark.pipeline import build_kg
@@ -34,8 +33,17 @@ def test_levenshtein_similarity(spark):
 
 
 def test_mixed_score(spark):
-    df = spark.createDataFrame([(1.0, 1.0, 0), (1.0, 1.0, 2)], "c double, l double, d int")
-    out = [r["s"] for r in df.select(mixed_score(F.col("c"), F.col("l"), F.col("d")).alias("s")).collect()]
+    from kgcompass_spark.config import DECAY_FACTOR, VECTOR_SIMILARITY_WEIGHT
+    from kgcompass_spark.plans.related import _blend
+
+    df = spark.createDataFrame(
+        [(1.0, 1.0, 0), (1.0, 1.0, 2)], "_cos double, _lev double, cost int"
+    ).selectExpr(
+        "*", "'method' AS entity_type", "CAST(NULL AS string) AS name",
+        "CAST(NULL AS string) AS file_path", "CAST(NULL AS string) AS _rtext",
+    )
+    scored = _blend(df, F.lit(DECAY_FACTOR), F.lit(VECTOR_SIMILARITY_WEIGHT), 0.0)
+    out = [r["similarity"] for r in scored.collect()]
     assert out[0] == pytest.approx(1.0)
     assert out[1] == pytest.approx(0.36)  # DECAY 0.6^2
 

@@ -5,10 +5,10 @@ from pyspark.sql import functions as F
 from kgcompass_spark.functions.mentions import (
     anchor_terms,
     closing_ref_mentions,
-    extract_all_mentions,
     file_path_mentions,
     inline_identifier_mentions,
     issue_number_mentions,
+    mentions_dataframe,
     noise_filter,
     rank_and_truncate,
     traceback_mentions,
@@ -84,11 +84,13 @@ def test_rank_and_truncate_order(spark):
 
 
 def test_extract_all_mentions_battery(spark):
+    """The full M1–M10 battery as the pipeline runs it (mentions_dataframe)."""
     txt = (
         "Crash in alpha/beta/gamma.py when `alpha.beta.gamma.Gamma.run` "
         "fires; see #7. Contact a@b.com about the `description`."
     )
-    out = run(spark, txt, extract_all_mentions)
+    df = spark.createDataFrame([(txt,)], "clean_text string")
+    out = mentions_dataframe(df).first()["mentions"]
     got = {(r["mtype"], r["text"]) for r in out}
     assert ("file", "alpha/beta/gamma.py") in got
     assert ("import", "alpha.beta.gamma.Gamma.run") in got

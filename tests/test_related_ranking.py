@@ -160,6 +160,47 @@ def test_unsup_gnn_blend(spark, small_kg):
         assert sim == pytest.approx(base[node] + 0.18 * gs, rel=1e-6)
 
 
+def test_unsup_gnn_graph_score_values(spark, small_kg):
+    """Every row's graph_score equals a pure-Python power iteration over the
+    candidate-path pairs (root prepended to each candidate's path): rank₀ = 1
+    at the root, teleport 1, α = 0.85, 24 iterations, max-normalized."""
+    import math
+
+    from kgcompass_spark.config import STRONG_CONNECTION
+    from kgcompass_spark.operators.graph import bounded_sssp
+    from kgcompass_spark.operators.triples import with_reverse_edges
+
+    triples, ents, root_url, root_text = small_kg
+    root = f"issue:{root_url}"
+    rows = ranked_related_entities(
+        triples, ents, root_url, root_text, max_cost=3.0,
+        unsup_gnn_mode="pagerank", unsup_gnn_weight=0.0,
+    ).collect()
+    paths = {
+        r.node: [root] + [p["node"] for p in r.path]
+        for r in bounded_sssp(
+            with_reverse_edges(triples), root,
+            max_hops=math.ceil(3.0 / STRONG_CONNECTION), max_cost=3.0,
+        ).collect()
+    }
+    pairs = set()
+    for r in rows:
+        ns = paths[r.node]
+        pairs |= set(zip(ns, ns[1:]))
+    nodes = {n for pair in pairs for n in pair}
+    deg = {n: sum(1 for s, _ in pairs if s == n) for n in nodes}
+    rank = {n: 1.0 if n == root else 0.0 for n in nodes}
+    for _ in range(24):
+        inflow = dict.fromkeys(nodes, 0.0)
+        for s, d in pairs:
+            inflow[d] += rank[s] / deg[s]
+        rank = {n: (1 - 0.85) + 0.85 * inflow[n] for n in nodes}
+    mx = max(rank.values())
+    assert rows and all(r.node in nodes for r in rows)
+    for r in rows:
+        assert r.graph_score == pytest.approx(rank[r.node] / mx, rel=1e-9, abs=1e-12)
+
+
 def test_rank_evidence_full_breaks_fourkey_ties(spark):
     """Two candidates identical on (support, distance, anchor) — the old
     4-key cannot order them; the 10-key must put the exact-anchor match
