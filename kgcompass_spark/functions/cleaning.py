@@ -23,6 +23,22 @@ _BLANK_RUNS = r"\n{3,}"
 
 REDACTION_TOKEN = "[target fixing reference removed]"
 
+_LIT_SEP = "\x00"
+
+
+def string_array_lit(values) -> Column:
+    """A constant ``array<string>`` built with O(1) py4j calls.
+
+    ``F.array(*[F.lit(v) ...])`` makes one JVM Column per element, so a
+    200-word table costs hundreds of driver round trips per plan. Splitting
+    one joined literal costs a handful; ConstantFolding evaluates the split
+    at optimization time, so the optimized plan holds the same array
+    literal. Values must not contain NUL (the separator)."""
+    values = list(values)
+    if not values:
+        return F.array().cast("array<string>")
+    return F.split(F.lit(_LIT_SEP.join(values)), _LIT_SEP)
+
 
 def clean_issue_text(col: Column) -> Column:
     """P1+P2+P3: ``_clean_issue_text`` semantics (fl.py:138-142).

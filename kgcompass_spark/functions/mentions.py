@@ -29,6 +29,7 @@ from ..config import (
     NOISY_DUNDER_REFERENCES,
     SEARCH_SPACE,
 )
+from .cleaning import string_array_lit
 
 # ---------------------------------------------------------------------------
 # Patterns (Java regex). Group 0 extraction everywhere; typing via struct.
@@ -152,18 +153,16 @@ def noise_filter(mentions: Column) -> Column:
 
     Drops: mention-stopwords, common words, noisy dunders, generic basenames,
     short (<3) names, pure numbers. Case-insensitive table membership, as in
-    the reference. Tables are literal arrays — Catalyst constant-folds the
+    the reference. Tables are literal arrays (``string_array_lit``: one
+    literal per table, not one per word) — Catalyst constant-folds the
     ``array_contains`` into the codegen'd filter; no UDF, no broadcast var
     needed (the tables are tiny).
     """
-    stop = sorted(
-        MENTION_EXCLUDE_PATTERNS | COMMON_WORD_REFERENCES
+    stop_arr = string_array_lit(
+        sorted(MENTION_EXCLUDE_PATTERNS | COMMON_WORD_REFERENCES)
     )
-    dunders = sorted(NOISY_DUNDER_REFERENCES)
-    generic = sorted(GENERIC_BASENAME_REFERENCES)
-    stop_arr = F.array(*[F.lit(s) for s in stop])
-    dunder_arr = F.array(*[F.lit(s) for s in dunders])
-    generic_arr = F.array(*[F.lit(s) for s in generic])
+    dunder_arr = string_array_lit(sorted(NOISY_DUNDER_REFERENCES))
+    generic_arr = string_array_lit(sorted(GENERIC_BASENAME_REFERENCES))
 
     def keep(m: Column) -> Column:
         t = m["text"]

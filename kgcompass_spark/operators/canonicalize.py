@@ -3,10 +3,12 @@
 The reference enforces identity by MERGE-on-natural-key in Neo4j
 (knowledge_graph.py:165-172: Method=(name, signature, file_path),
 Class=(name, file_path), File=path), and records a real bug where two path
-spellings split one entity (fl.py:391-414). At web scale the same guarantee
-is an equivalence closure: connected components over the
-entity ↔ natural-key bipartite graph, canonical id = min entity id per
-component, triples rewritten through the mapping with broadcast joins.
+spellings split one entity (fl.py:391-414). The Spark restatement groups
+entities by the same natural key with normalized paths: canonical id = min
+entity id per key, triples rewritten through the mapping with broadcast
+joins. Fuzzy canonicalization (near-spellings, not just path spellings)
+links entities by MinHash-LSH + Jaccard and closes the accepted pairs with
+connected components.
 """
 
 from __future__ import annotations
@@ -33,27 +35,23 @@ def natural_key(entities: DataFrame) -> DataFrame:
 
 
 def canonical_mapping(entities: DataFrame) -> DataFrame:
-    """(entity_id, canonical_id) via CC over the entity↔key bipartite graph.
+    """(entity_id, canonical_id): canonical id = min entity id per natural
+    key, one row per entity id. Lazy: one aggregate, no action.
 
-    Single-spelling entities map to themselves. The CC runs delta-frontier
-    min-label propagation with double pointer jumping (a few shuffles per
-    round, O(log n) rounds on path-shaped graphs) — the scale path for
-    10^9-entity inventories; at small scale it converges in 1-2 rounds.
+    Precondition: an entity id determines its natural key. Every inventory
+    the package builds derives ``entity_id`` from (kind, name, file_path)
+    (``sources/datagen.py``, ``code_entities.inventory_from_sources``), and
+    ``natural_key`` is a function of the same fields, so each entity has
+    degree 1 in the entity↔key bipartite graph. Its connected components
+    are then exactly the key groups, and this group-by gives the mapping
+    the CC closure would, without the iterative rounds. Exact duplicate
+    rows map once. Single-spelling entities map to themselves.
     """
-    nk = natural_key(entities)
-    edges = nk.select(
-        F.col("entity_id").alias("src"),
-        F.concat(F.lit("KEY::"), F.col("nat_key")).alias("dst"),
+    ids = natural_key(entities).groupBy("nat_key").agg(
+        F.collect_set("entity_id").alias("_ids")
     )
-    cc = connected_components(edges)
-    ent_cc = cc.filter(~F.col("node").startswith("KEY::"))
-    # canonical id = min *entity* id in the component (components may be
-    # labeled by a KEY:: node when it sorts lowest, so re-minimize over
-    # entity members only)
-    canon = ent_cc.groupBy("component").agg(F.min("node").alias("canonical_id"))
-    return (
-        ent_cc.join(canon, "component")
-        .select(F.col("node").alias("entity_id"), "canonical_id")
+    return ids.select(
+        F.explode("_ids").alias("entity_id"), F.array_min("_ids").alias("canonical_id")
     )
 
 
@@ -167,8 +165,6 @@ def fuzzy_canonical_mapping(
         .filter(F.col("_j") >= threshold)
         .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )
-    from .graph import connected_components
-
     cc = connected_components(edges)
     return (
         names.select(F.col(id_col).alias("entity_id"))

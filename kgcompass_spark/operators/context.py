@@ -35,6 +35,8 @@ combined, and the per-issue top-N window partitioned by url.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -52,9 +54,11 @@ from ..config import (
     REPAIR_EXPERIENCE_LIMIT,
     REPAIR_EXPERIENCE_MAX_FILES,
     REPAIR_EXPERIENCE_MIN_SCORE,
+    REPAIR_EXPERIENCE_REGEX,
     STRONG_CONNECTION,
     WEAK_CONNECTION,
 )
+from ..functions.cleaning import string_array_lit
 
 _IDENT_PAT = r"[A-Za-z_][A-Za-z0-9_]{2,}"
 _VERSION_PAT = r"(?i)\bv?\d+(?:\.\d+){1,4}\b"
@@ -74,7 +78,7 @@ def context_tokens(col) -> F.Column:
     idents = F.transform(
         F.regexp_extract_all(col, F.lit(_IDENT_PAT), 0), lambda t: F.lower(t)
     )
-    idents = F.array_except(idents, F.array(*[F.lit(s) for s in sorted(CONTEXT_STOPWORDS)]))
+    idents = F.array_except(idents, string_array_lit(sorted(CONTEXT_STOPWORDS)))
     versions = F.transform(
         F.regexp_extract_all(col, F.lit(_VERSION_PAT), 0), lambda t: F.lower(t)
     )
@@ -96,14 +100,27 @@ _VOCAB_PRUNE_MAX = 8192
 
 # Row-local context selection collects the WHOLE artifact inventory into one
 # broadcast array<struct> row and scores it per page (see
-# ``context_triples_parts``). That wins (−21% on the full pipeline) while the
+# ``_row_local_selections``). That wins (−21% on the full pipeline) while the
 # inventory is per-repo-sized, but the per-page transform is O(|artifacts|)
-# and the single collect_list row grows without bound — at a multi-repo
-# corpus a 100k-commit repo would make every page's projection a straggler
-# and the one array row an OOM. Above this many artifacts the pipeline falls
+# and the one array row grows without bound — at a multi-repo corpus a
+# 100k-commit repo would make every page's projection a straggler and the
+# driver-side collect an OOM. Above this many artifacts the pipeline falls
 # back to the groupBy hash-agg selection path, whose cost scales with the
 # (score > 0) candidate pairs instead.
 _ROW_LOCAL_MAX_ARTIFACTS = 4096
+
+
+def _prune_to_vocab(issue_arrays: DataFrame, vocab) -> DataFrame:
+    """Issue token arrays cut down to the artifact vocabulary, so each later
+    per-artifact intersect is O(|shared candidates|). Skipped when the
+    vocabulary is empty or over ``_VOCAB_PRUNE_MAX``."""
+    if not 0 < len(vocab) <= _VOCAB_PRUNE_MAX:
+        return issue_arrays
+    return issue_arrays.select(
+        "url",
+        "warc_ts",
+        F.array_intersect("_itoks", string_array_lit(sorted(vocab))).alias("_itoks"),
+    )
 
 
 def score_artifacts(
@@ -125,8 +142,7 @@ def score_artifacts(
     |artifacts| narrow rows. When the distinct artifact vocabulary is small
     (≤ ``_VOCAB_PRUNE_MAX`` — collected driver-side from the BROADCAST
     side, so bounded by the same ~10 MB that makes the join a broadcast),
-    issue arrays are pre-pruned to that vocabulary, which shrinks the
-    per-row intersect to O(|shared candidates|).
+    issue arrays are pre-pruned to that vocabulary (``_prune_to_vocab``).
     """
     if issue_arrays is None:
         issue_arrays = issue_token_arrays(issues)
@@ -143,17 +159,9 @@ def score_artifacts(
         .limit(_VOCAB_PRUNE_MAX + 1)
         .collect()
     ]
-    it = issue_arrays
-    if 0 < len(vocab) <= _VOCAB_PRUNE_MAX:
-        it = it.select(
-            "url",
-            "warc_ts",
-            F.array_intersect(
-                "_itoks", F.array(*[F.lit(v) for v in sorted(vocab)])
-            ).alias("_itoks"),
-        )
     return (
-        it.crossJoin(F.broadcast(art_arr))
+        _prune_to_vocab(issue_arrays, vocab)
+        .crossJoin(F.broadcast(art_arr))
         .select(
             "url",
             "warc_ts",
@@ -197,12 +205,12 @@ def source_files_col(col) -> F.Column:
 
 
 def _share(df: DataFrame) -> DataFrame:
-    """Persist a small shared subtree (catalog-managed — ``clearCache``
-    frees it; NOT localCheckpoint, whose storage leaks across runs, see
-    ``context_triples``). Each stage's per-issue selection feeds 2-3 edge
+    """Persist a small shared subtree (catalog-managed — ``unpersist`` or
+    ``clearCache`` frees it; NOT localCheckpoint, whose storage leaks
+    across runs). Each stage's per-issue selection feeds 2-3 edge
     branches; uncached, every branch re-runs the token-scoring join and the
-    top-N window — measured ~2 s per extra pass at 48k pages, ~8 s across
-    the three context stages."""
+    top-N selection — measured ~2 s per extra pass at 48k pages, ~8 s
+    across the three context stages."""
     return df.persist()
 
 
@@ -228,6 +236,17 @@ def eligible_commits(
     )
 
 
+def _is_repair(max_files: int = REPAIR_EXPERIENCE_MAX_FILES) -> F.Column:
+    """Repair-experience commits among ``eligible_commits`` rows built with a
+    file cap ≥ ``max_files`` (fl.py:2384-2396): at most ``max_files`` RAW
+    changed files and repair keywords in the first 3 message lines. The
+    repair set is a filter of the commit-context set, so eligibility is
+    built once per plan."""
+    return (F.size("changed_files") <= max_files) & _first_lines(
+        F.col("message"), 3
+    ).rlike(REPAIR_EXPERIENCE_REGEX)
+
+
 def _commit_score_text() -> F.Column:
     # lazy — Columns need an active SparkContext
     return F.concat_ws("\n", F.col("message"), F.array_join("source_files", "\n"))
@@ -235,27 +254,21 @@ def _commit_score_text() -> F.Column:
 
 def commit_context_scores(
     issues: DataFrame | None,
-    commits: DataFrame,
-    max_files: int = COMMIT_CONTEXT_MAX_FILES,
+    eligible: DataFrame,
     issue_arrays: DataFrame | None = None,
-    raw_scored: DataFrame | None = None,
 ) -> DataFrame:
     """Shared (issue, commit) scoring for the commit AND repair-experience
     stages: (url, warc_ts, commit_id, score, committed_ts), leakage-guarded,
-    score > 0, over eligible commits (see ``eligible_commits``). Score text
-    is message + the FILTERED source list (fl.py:2462). Both stages
-    filter/rank this one result — scoring runs once. ``raw_scored``
-    (url, warc_ts, commit_id, score) skips the token join — the combined
-    commit+doc scoring pass of ``context_triples_parts`` supplies it."""
-    eligible = eligible_commits(commits, max_files)
-    if raw_scored is None:
-        raw_scored = score_artifacts(
-            issues,
-            eligible.withColumn("_st", _commit_score_text()),
-            "commit_id",
-            F.col("_st"),
-            issue_arrays=issue_arrays,
-        )
+    score > 0, over ``eligible`` (an ``eligible_commits`` frame, or a subset
+    of one). Score text is message + the FILTERED source list (fl.py:2462);
+    a commit's score does not depend on which other commits are scored."""
+    raw_scored = score_artifacts(
+        issues,
+        eligible.withColumn("_st", _commit_score_text()),
+        "commit_id",
+        F.col("_st"),
+        issue_arrays=issue_arrays,
+    )
     return (
         raw_scored.join(
             F.broadcast(eligible.select("commit_id", "committed_ts")), "commit_id"
@@ -265,15 +278,98 @@ def commit_context_scores(
     )
 
 
+def _ranked_commits(scored: DataFrame, limit: int) -> DataFrame:
+    """(url, commit_id): the per-issue top ``limit`` by (-score, -ts,
+    commit_id) — the standalone stages' window selection."""
+    w = Window.partitionBy("url").orderBy(
+        F.desc("score"), F.desc("committed_ts"), F.asc("commit_id")
+    )
+    return _share(
+        scored.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= limit)
+        .select("url", "commit_id")
+    )
+
+
+def _selected_ids(sel: DataFrame, col: str, id_name: str) -> DataFrame:
+    """(url, <id_name>) rows out of a per-url array of selection structs
+    whose ``id`` field is the artifact id."""
+    return sel.select("url", F.explode(col).alias("_k")).select(
+        "url", F.col("_k.id").alias(id_name)
+    )
+
+
+def _selected_commits(sel: DataFrame) -> DataFrame:
+    """(url, commit_id, _rep): the commit (``_ta``) and repair (``_tr``)
+    selections of a per-url selection frame, tagged for ``_commit_edges``."""
+    return (
+        _selected_ids(sel, "_ta", "commit_id")
+        .withColumn("_rep", F.lit(False))
+        .unionByName(_selected_ids(sel, "_tr", "commit_id").withColumn("_rep", F.lit(True)))
+    )
+
+
+def _commit_edges(
+    selected: DataFrame,
+    eligible: DataFrame,
+    link_files_cap: int = COMMIT_LINK_FILES_CAP,
+    repair_files_cap: int = REPAIR_EXPERIENCE_MAX_FILES,
+) -> DataFrame:
+    """Edges of the selected (url, commit_id, _rep) rows, both commit
+    families in one pass. ``_rep`` false — a commit-context selection:
+    issue -[points to commit]-> commit:<sha> (NORMAL) and commit:<sha>
+    -[modified file]-> file for its first ``link_files_cap`` SOURCE files
+    (fl.py:2472-2500). ``_rep`` true — a repair-experience selection:
+    issue -[points to repair experience]-> repair:<sha> (STRONG) and
+    repair:<sha> -[mentions file]-> file for its first ``repair_files_cap``
+    (fl.py:2384-2410). Both lists re-filter to source files, as the
+    reference's emit loops do. One distinct + broadcast join + distinct
+    serves both families."""
+    rep = F.col("_rep")
+    node = F.concat(
+        F.when(rep, F.lit("repair:")).otherwise(F.lit("commit:")), F.col("commit_id")
+    )
+    issue_edges = selected.select(
+        F.concat(F.lit("issue:"), F.col("url")).alias("subj"),
+        F.when(rep, F.lit("points to repair experience"))
+        .otherwise(F.lit("points to commit"))
+        .alias("predicate"),
+        node.alias("obj"),
+        F.when(rep, F.lit(STRONG_CONNECTION))
+        .otherwise(F.lit(NORMAL_CONNECTION))
+        .alias("weight"),
+        F.col("url").alias("src_url"),
+    )
+    cap = F.when(rep, F.lit(repair_files_cap)).otherwise(F.lit(link_files_cap))
+    file_edges = (
+        selected.select("commit_id", "_rep")
+        .distinct()
+        .join(F.broadcast(eligible.select("commit_id", "source_files")), "commit_id")
+        .select(
+            node.alias("subj"),
+            F.when(rep, F.lit("mentions file"))
+            .otherwise(F.lit("modified file"))
+            .alias("predicate"),
+            F.explode(F.slice("source_files", 1, cap)).alias("fp"),
+        )
+        .select(
+            "subj",
+            "predicate",
+            F.concat(F.lit("file:"), F.col("fp")).alias("obj"),
+            F.lit(NORMAL_CONNECTION).alias("weight"),
+            F.lit("").alias("src_url"),
+        )
+        .distinct()
+    )
+    return issue_edges.unionByName(file_edges)
+
+
 def link_commit_context(
     issues: DataFrame | None,
     commits: DataFrame,
     limit: int = COMMIT_CONTEXT_LIMIT,
     max_files: int = COMMIT_CONTEXT_MAX_FILES,
     link_files_cap: int = COMMIT_LINK_FILES_CAP,
-    scored: DataFrame | None = None,
-    issue_arrays: DataFrame | None = None,
-    selected: DataFrame | None = None,
 ) -> DataFrame:
     """Historical-commit context (fl.py:2412-2500).
 
@@ -287,47 +383,14 @@ def link_commit_context(
     non-language paths never get edges). Tie-break beyond the reference's
     (-score, -committed_date): commit_id asc, so output is deterministic.
 
-    ``selected`` (url, commit_id — the per-issue top-``limit`` rows) skips
-    scoring + window entirely; ``commit_repair_selections`` computes the
-    commit and repair selections from ONE shuffle for the pipeline.
+    The standalone stage; the pipeline selects through
+    ``context_triples_parts`` and shares ``_commit_edges`` with it.
     """
     eligible = eligible_commits(commits, max_files)
-    if selected is None:
-        if scored is None:
-            scored = commit_context_scores(issues, commits, max_files, issue_arrays)
-        w = Window.partitionBy("url").orderBy(
-            F.desc("score"), F.desc("committed_ts"), F.asc("commit_id")
-        )
-        selected = _share(
-            scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= limit)
-            .select("url", "commit_id")
-        )
-    issue_commit = selected.select(
-        F.concat(F.lit("issue:"), F.col("url")).alias("subj"),
-        F.lit("points to commit").alias("predicate"),
-        F.concat(F.lit("commit:"), F.col("commit_id")).alias("obj"),
-        F.lit(NORMAL_CONNECTION).alias("weight"),
-        F.col("url").alias("src_url"),
+    selected = _ranked_commits(commit_context_scores(issues, eligible), limit)
+    return _commit_edges(
+        selected.withColumn("_rep", F.lit(False)), eligible, link_files_cap
     )
-    commit_file = (
-        selected.select("commit_id")
-        .distinct()
-        .join(F.broadcast(eligible.select("commit_id", "source_files")), "commit_id")
-        .select(
-            "commit_id",
-            F.explode(F.slice("source_files", 1, link_files_cap)).alias("fp"),
-        )
-        .select(
-            F.concat(F.lit("commit:"), F.col("commit_id")).alias("subj"),
-            F.lit("modified file").alias("predicate"),
-            F.concat(F.lit("file:"), F.col("fp")).alias("obj"),
-            F.lit(NORMAL_CONNECTION).alias("weight"),
-            F.lit("").alias("src_url"),
-        )
-        .distinct()
-    )
-    return issue_commit.unionByName(commit_file)
 
 
 def commit_method_triples(commits: DataFrame, entities: DataFrame) -> DataFrame:
@@ -370,9 +433,6 @@ def link_repair_experience(
     limit: int = REPAIR_EXPERIENCE_LIMIT,
     min_score: int = REPAIR_EXPERIENCE_MIN_SCORE,
     max_files: int = REPAIR_EXPERIENCE_MAX_FILES,
-    scored: DataFrame | None = None,
-    issue_arrays: DataFrame | None = None,
-    selected: DataFrame | None = None,
 ) -> DataFrame:
     """Historical repair-experience context (fl.py:2317-2410).
 
@@ -384,88 +444,37 @@ def link_repair_experience(
     repair:<sha> -[mentions file]-> file (NORMAL) over the first
     ``max_files`` SOURCE files (fl.py:2399-2410 re-filters in the loop).
 
-    ``scored`` may be the shared ``commit_context_scores`` result (repair
-    commits are a subset of commit-context-eligible ones, and the score is
-    identical) — the repair-specific filters are applied here. ``selected``
-    (url, commit_id — the gated per-issue top-``limit`` rows) skips both;
-    see ``commit_repair_selections``.
+    The standalone stage; the pipeline selects through
+    ``context_triples_parts`` and shares ``_commit_edges`` with it.
     """
-    from ..config import REPAIR_EXPERIENCE_REGEX
-
-    repair = eligible_commits(commits, max_files).filter(
-        _first_lines(F.col("message"), 3).rlike(REPAIR_EXPERIENCE_REGEX)
-    )
-    if selected is None:
-        if scored is None:
-            scored = commit_context_scores(issues, commits, issue_arrays=issue_arrays)
-        scored = scored.join(
-            F.broadcast(repair.select("commit_id")), "commit_id", "left_semi"
-        ).filter(F.col("score") >= min_score)
-        w = Window.partitionBy("url").orderBy(
-            F.desc("score"), F.desc("committed_ts"), F.asc("commit_id")
-        )
-        selected = _share(
-            scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= limit)
-            .select("url", "commit_id")
-        )
-    issue_exp = selected.select(
-        F.concat(F.lit("issue:"), F.col("url")).alias("subj"),
-        F.lit("points to repair experience").alias("predicate"),
-        F.concat(F.lit("repair:"), F.col("commit_id")).alias("obj"),
-        F.lit(STRONG_CONNECTION).alias("weight"),
-        F.col("url").alias("src_url"),
-    )
-    exp_file = (
-        selected.select("commit_id")
-        .distinct()
-        .join(F.broadcast(repair.select("commit_id", "source_files")), "commit_id")
-        .select("commit_id", F.explode(F.slice("source_files", 1, max_files)).alias("fp"))
-        .select(
-            F.concat(F.lit("repair:"), F.col("commit_id")).alias("subj"),
-            F.lit("mentions file").alias("predicate"),
-            F.concat(F.lit("file:"), F.col("fp")).alias("obj"),
-            F.lit(NORMAL_CONNECTION).alias("weight"),
-            F.lit("").alias("src_url"),
-        )
-        .distinct()
-    )
-    return issue_exp.unionByName(exp_file)
+    repair = eligible_commits(commits, max_files).filter(_is_repair(max_files))
+    scored = commit_context_scores(issues, repair).filter(F.col("score") >= min_score)
+    selected = _ranked_commits(scored, limit).withColumn("_rep", F.lit(True))
+    return _commit_edges(selected, repair, repair_files_cap=max_files)
 
 
-def commit_repair_selections(
-    scored: DataFrame,
-    commits: DataFrame,
-    commit_limit: int = COMMIT_CONTEXT_LIMIT,
-    repair_limit: int = REPAIR_EXPERIENCE_LIMIT,
-    repair_min_score: int = REPAIR_EXPERIENCE_MIN_SCORE,
-    repair_max_files: int = REPAIR_EXPERIENCE_MAX_FILES,
-) -> tuple[DataFrame, DataFrame]:
-    """Both per-issue selections from ONE shuffle — a hash-agg top-k, not
-    a window: per url the scored rows collapse to two ≤k arrays
+def commit_repair_selections(scored: DataFrame, eligible: DataFrame) -> DataFrame:
+    """Both per-issue commit selections from ONE shuffle — a hash-agg top-k,
+    not a window: per url the scored rows collapse to two ≤k arrays
     (``slice(array_sort(collect_list(struct)), 1, k)``), so the exchange
     is a plain aggregate with map-side partial lists and NO sort of the
     scored table (~1.5M rows at bench density; the per-url list is ≤
     |commits|, so the agg buffer is bounded by the broadcast-sized artifact
     count). Sort order (score desc, committed_ts desc, commit_id asc) is
     encoded as an ascending struct key (negated score / epoch). Selection
-    semantics are identical to the old per-url windows: the repair rank is
-    computed WITHIN the gated rows (the conditional collect drops ungated
-    rows before ranking). Returns (selected_commits, selected_repair), both
-    (url, commit_id), derived narrowly from one persisted 1-row-per-url
-    aggregate."""
-    from ..config import REPAIR_EXPERIENCE_REGEX
-
-    repair_ids = (
-        eligible_commits(commits, repair_max_files)
-        .filter(_first_lines(F.col("message"), 3).rlike(REPAIR_EXPERIENCE_REGEX))
-        .select("commit_id")
-        .withColumn("_rep", F.lit(True))
-    )
-    sc = scored.join(F.broadcast(repair_ids), "commit_id", "left").withColumn(
+    semantics are identical to the standalone per-url windows: the repair
+    rank is computed WITHIN the gated rows (the conditional collect drops
+    ungated rows before ranking). Returns (url, _ta, _tr): the commit and
+    repair selections as arrays of structs whose ``id`` is the commit id.
+    ``eligible`` is the ``eligible_commits`` frame ``scored`` was scored
+    over; the repair flag is a filter of it (``_is_repair``)."""
+    sc = scored.join(
+        F.broadcast(eligible.select("commit_id", _is_repair().alias("_rep"))),
+        "commit_id",
+    ).withColumn(
         "_rep_ok",
         F.coalesce(F.col("_rep"), F.lit(False))
-        & (F.col("score") >= repair_min_score),
+        & (F.col("score") >= REPAIR_EXPERIENCE_MIN_SCORE),
     )
     # ascending struct order ≡ (score desc, committed_ts desc, commit_id
     # asc); the double cast keeps microsecond timestamps exactly (53-bit
@@ -473,25 +482,16 @@ def commit_repair_selections(
     key = F.struct(
         (-F.col("score")).alias("k1"),
         (-F.col("committed_ts").cast("double")).alias("k2"),
-        F.col("commit_id").alias("cid"),
+        F.col("commit_id").alias("id"),
     )
-    agg = _share(
-        sc.groupBy("url").agg(
-            F.slice(F.array_sort(F.collect_list(key)), 1, commit_limit).alias("_ta"),
-            F.slice(
-                F.array_sort(F.collect_list(F.when(F.col("_rep_ok"), key))),
-                1,
-                repair_limit,
-            ).alias("_tr"),
-        )
+    return sc.groupBy("url").agg(
+        F.slice(F.array_sort(F.collect_list(key)), 1, COMMIT_CONTEXT_LIMIT).alias("_ta"),
+        F.slice(
+            F.array_sort(F.collect_list(F.when(F.col("_rep_ok"), key))),
+            1,
+            REPAIR_EXPERIENCE_LIMIT,
+        ).alias("_tr"),
     )
-    selected_commits = agg.select("url", F.explode("_ta").alias("_k")).select(
-        "url", F.col("_k.cid").alias("commit_id")
-    )
-    selected_repair = agg.select("url", F.explode("_tr").alias("_k")).select(
-        "url", F.col("_k.cid").alias("commit_id")
-    )
-    return selected_commits, selected_repair
 
 
 def doc_symbols(col) -> F.Column:
@@ -533,53 +533,43 @@ def _doc_score_text() -> F.Column:
     return F.concat_ws("\n", F.col("doc_path"), F.col("text"))
 
 
-def documentation_parts(
+def doc_selections(
     issues: DataFrame | None,
     docs: DataFrame,
-    entities: DataFrame,
     limit: int = DOC_CONTEXT_LIMIT,
     issue_arrays: DataFrame | None = None,
-    scored: DataFrame | None = None,
-    selected: DataFrame | None = None,
+) -> DataFrame:
+    """(url, _td): per issue the top ``limit`` eligible ``docs`` by
+    (-score, doc_path), score > 0, as an array of structs whose ``id`` is
+    the doc path. A hash-agg top-k per url (no window sort of the scored
+    table) — the same shape as ``commit_repair_selections``."""
+    scored = score_artifacts(
+        issues, docs.withColumn("_st", _doc_score_text()), "doc_path",
+        F.col("_st"), issue_arrays=issue_arrays,
+    )
+    dkey = F.struct((-F.col("score")).alias("k1"), F.col("doc_path").alias("id"))
+    return scored.groupBy("url").agg(
+        F.slice(F.array_sort(F.collect_list(dkey)), 1, limit).alias("_td")
+    )
+
+
+def documentation_parts(
+    selected: DataFrame, docs: DataFrame, entities: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
-    """Documentation context (fl.py:2086-2145 + 2240-2316 doc-symbol pass),
+    """Documentation context edges (fl.py:2086-2145 + 2240-2316 doc-symbol
+    pass) for the selected (url, doc_path) rows over eligible ``docs``,
     returned as (passthrough, collidable) edge parts — see
     ``context_triples_parts`` for the split rationale; ``link_documentation``
     is the unioned public shape.
 
-    Per issue: docs scored by context tokens against path+text, score > 0,
-    top ``limit`` by (-score, doc_path). Each selected (issue, doc) becomes
-    a Documentation node ``doc:<issue-url>:<sha1(path)[:12]>`` (the
-    reference keys doc nodes per issue, fl.py:2307-2308). Symbols in the doc
-    resolve against the entity inventory by exact qualified name:
+    Each selected (issue, doc) becomes a Documentation node
+    ``doc:<issue-url>:<sha1(path)[:12]>`` (the reference keys doc nodes per
+    issue, fl.py:2307-2308). Symbols in the doc resolve against the entity
+    inventory by exact qualified name:
       doc  -[mentions file by documentation]-> file   (NORMAL)
       issue-[points to method/class]-> entity         (NORMAL × 1.5 — the
         DOC_CONTEXT_MULTIPLIER weakening for doc-derived evidence, fl.py:2139)
-
-    ``scored`` (url, warc_ts, doc_path, score — over ELIGIBLE docs) skips
-    the token join; ``selected`` (url, doc_path — the per-issue top rows)
-    skips scoring + selection entirely — the fused one-exchange selection
-    of ``context_triples_parts`` supplies it.
     """
-    docs = eligible_docs(docs)
-    if selected is None:
-        if scored is None:
-            scored = score_artifacts(
-                issues, docs.withColumn("_st", _doc_score_text()), "doc_path",
-                F.col("_st"), issue_arrays=issue_arrays,
-            )
-        scored = scored.filter(F.col("score") > 0)
-        # hash-agg top-k per url (no window sort of the scored table) —
-        # same shape as commit_repair_selections; order (score desc,
-        # doc_path asc) as an ascending struct key
-        dkey = F.struct((-F.col("score")).alias("k1"), F.col("doc_path").alias("dp"))
-        selected = _share(
-            scored.groupBy("url").agg(
-                F.slice(F.array_sort(F.collect_list(dkey)), 1, limit).alias("_t")
-            )
-        ).select("url", F.explode("_t").alias("_k")).select(
-            "url", F.col("_k.dp").alias("doc_path")
-        )
     doc_id = F.concat(
         F.lit("doc:"), F.col("url"), F.lit(":"), F.substring(F.sha1("doc_path"), 1, 12)
     )
@@ -591,13 +581,18 @@ def documentation_parts(
     resolved = symbols.join(F.broadcast(named), F.col("sym") == F.col("_name")).select(
         "doc_path", "entity_id", "kind", "file_path"
     )
+    # dedup (doc, file) on the TINY resolved side before fanning out per
+    # issue: ``selected`` is unique per (url, doc_path), so the join output
+    # is already distinct — a post-join .distinct() here shuffled ~750k
+    # rows at bench density for nothing
+    doc_files = F.broadcast(resolved.select("doc_path", "file_path").distinct())
     # the reference creates the Documentation node + issue→doc link only
     # when at least one doc symbol resolved to a source file
     # (fl.py:2306-2311 ``if not linked_files: continue``) — a selected doc
-    # with zero resolutions still consumes a top-N slot but emits nothing
-    issue_doc = selected.join(
-        F.broadcast(resolved.select("doc_path").distinct()), "doc_path", "left_semi"
-    ).select(
+    # with zero resolutions still consumes a top-N slot but emits nothing.
+    # The semi join reuses the doc_files broadcast (same build side, same
+    # key) instead of a distinct of its own.
+    issue_doc = selected.join(doc_files, "doc_path", "left_semi").select(
         F.concat(F.lit("issue:"), F.col("url")).alias("subj"),
         F.lit("points to documentation").alias("predicate"),
         doc_id.alias("obj"),
@@ -608,12 +603,7 @@ def documentation_parts(
     # shuffled the page-derived ``selected`` side on doc_path (seen in a
     # plan audit) — at scale that is a pages-sized exchange for a dim join
     sel_resolved = selected.join(F.broadcast(resolved), "doc_path")
-    # dedup (doc, file) on the TINY resolved side before fanning out per
-    # issue: ``selected`` is unique per (url, doc_path), so the join output
-    # is already distinct — a post-join .distinct() here shuffled ~750k
-    # rows at bench density for nothing
-    doc_files = resolved.select("doc_path", "file_path").distinct()
-    doc_file = selected.join(F.broadcast(doc_files), "doc_path").select(
+    doc_file = selected.join(doc_files, "doc_path").select(
         doc_id.alias("subj"),
         F.lit("mentions file by documentation").alias("predicate"),
         F.concat(F.lit("file:"), F.col("file_path")).alias("obj"),
@@ -645,13 +635,17 @@ def link_documentation(
     docs: DataFrame,
     entities: DataFrame,
     limit: int = DOC_CONTEXT_LIMIT,
-    issue_arrays: DataFrame | None = None,
 ) -> DataFrame:
-    """Unioned documentation-context edges (``documentation_parts`` plus the
-    per-(issue, entity) dedup the pipeline's MERGE otherwise provides)."""
-    passthrough, collidable = documentation_parts(
-        issues, docs, entities, limit, issue_arrays
+    """Documentation context (fl.py:2086-2145): per issue, eligible docs
+    scored by context tokens against path+text, score > 0, top ``limit``
+    by (-score, doc_path); the edges of ``documentation_parts`` unioned,
+    plus the per-(issue, entity) dedup the pipeline's MERGE otherwise
+    provides."""
+    docs = eligible_docs(docs)
+    selected = _selected_ids(
+        _share(doc_selections(issues, docs, limit)), "_td", "doc_path"
     )
+    passthrough, collidable = documentation_parts(selected, docs, entities)
     return passthrough.unionByName(collidable.distinct())
 
 
@@ -660,9 +654,8 @@ def context_triples_parts(
     entities: DataFrame,
     commits: DataFrame | None = None,
     docs: DataFrame | None = None,
-    issue_arrays: DataFrame | None = None,
-) -> tuple[DataFrame | None, DataFrame | None]:
-    """All context stages as (passthrough, collidable) edge parts.
+) -> tuple[DataFrame | None, DataFrame | None, list[DataFrame]]:
+    """All context stages as (passthrough, collidable, persisted).
 
     ``collidable`` is the doc-symbol multiplier branch — the only context
     edges whose (subj, predicate, obj) can also be produced by the core
@@ -675,200 +668,178 @@ def context_triples_parts(
     MERGE shuffle entirely — at bench density that is ~1.9M of 2.2M context
     rows skipping a wide groupBy.
 
-    The per-page token ARRAYS feed ONE fused scoring pass for both artifact
+    ``persisted`` lists the frames persisted here (the per-issue
+    selections, each feeding 2-3 edge branches); the caller unpersists
+    them once it has run its action.
+
+    The per-page token ARRAYS feed ONE scoring pass for all artifact
     families, and the (issue, commit) scoring is shared between the commit
     and repair stages — without this the page-token regex battery ran 3×
-    per pipeline. Only the scored result (``raw``) is persisted; the token
-    arrays themselves have exactly one consumer since the fusion, so the
-    old exploded-index persist was pure overhead. (Do NOT localCheckpoint
-    shared subtrees here: checkpoint storage is not catalog-managed, so
-    repeated pipeline runs leak executor memory — measured 4× slowdown.)"""
+    per pipeline. Commit eligibility is built once; the repair set is a
+    filter of it. (Do NOT localCheckpoint shared subtrees here: checkpoint
+    storage is not catalog-managed, so repeated pipeline runs leak executor
+    memory — measured 4× slowdown.)
+
+    Not lazy: with both commits and docs, one driver-side collect of at
+    most ``_ROW_LOCAL_MAX_ARTIFACTS + 1`` artifact token rows decides the
+    selection path and supplies the vocabulary and the broadcast artifact
+    row; otherwise ``score_artifacts`` collects the vocabulary.
+    """
+    if commits is None and docs is None:
+        return None, None, []
+    persisted = []
+    toks = issue_token_arrays(issues)
+    elig = dels = sel = None
+    if commits is not None:
+        elig = eligible_commits(commits)
+    if docs is not None:
+        dels = eligible_docs(docs)
+    if commits is not None and docs is not None:
+        sel = _row_local_selections(toks, elig, dels)
+    if sel is not None:
+        persisted.append(_share(sel))
+        sel_commits = _selected_commits(sel)
+        sel_docs = _selected_ids(sel, "_td", "doc_path")
+    else:
+        # the groupBy hash-agg selections: one artifact family only, or an
+        # inventory over the row-local size gate
+        if commits is not None:
+            scored = _share(commit_context_scores(issues, elig, issue_arrays=toks))
+            agg = _share(commit_repair_selections(scored, elig))
+            persisted += [scored, agg]
+            sel_commits = _selected_commits(agg)
+        if docs is not None:
+            dsel = _share(doc_selections(issues, dels, issue_arrays=toks))
+            persisted.append(dsel)
+            sel_docs = _selected_ids(dsel, "_td", "doc_path")
     parts = []
     collidable = None
-    toks = issue_arrays if issue_arrays is not None else issue_token_arrays(issues)
-    if commits is not None and docs is not None:
-        # ONE scoring pass and ZERO selection exchanges for both artifact
-        # families. Every candidate row for a url derives from that url's
-        # single page row, so the per-issue top-N is a ROW-LOCAL
-        # computation: broadcast the (tiny) artifact table as ONE row
-        # carrying array<struct>, score all artifacts per page with an
-        # array transform, sort once, and slice the commit / repair / doc
-        # selections out of the sorted array — no |pages|×|artifacts| pair
-        # materialization, no groupBy(url), no collect_list. (The previous
-        # shape shuffled the 2.1M-row scored table into a 3×collect_list
-        # hash-agg — ~3.5 s at 48k pages for work a projection can do.)
-        from ..config import REPAIR_EXPERIENCE_REGEX
-
-        elig = eligible_commits(commits)
-        rep_ids = (
-            eligible_commits(commits, REPAIR_EXPERIENCE_MAX_FILES)
-            .filter(_first_lines(F.col("message"), 3).rlike(REPAIR_EXPERIENCE_REGEX))
-            .select(F.col("commit_id").alias("_aid"), F.lit(True).alias("_rep"))
-        )
-        c_one = (
-            # committed_ts IS NOT NULL: the standalone path's leakage guard
-            # (committed_ts <= warc_ts) drops null-timestamp commits from
-            # every selection; the fused sort key would coalesce null to
-            # epoch 0 and let them PASS — filter them here so both branches
-            # agree
-            elig.filter(F.col("committed_ts").isNotNull())
-            .select(
-                F.col("commit_id").alias("_aid"),
-                context_tokens(_commit_score_text()).alias("_atoks"),
-                F.col("committed_ts").cast("double").alias("_cts"),
-                F.lit(True).alias("_isc"),
-            )
-            .join(F.broadcast(rep_ids), "_aid", "left")
-            .withColumn("_rep", F.coalesce("_rep", F.lit(False)))
-        )
-        d_one = eligible_docs(docs).select(
-            F.col("doc_path").alias("_aid"),
-            context_tokens(_doc_score_text()).alias("_atoks"),
-            F.lit(None).cast("double").alias("_cts"),
-            F.lit(False).alias("_isc"),
-            F.lit(False).alias("_rep"),
-        )
-        # persisted: consumed by the size-gate probe, the vocabulary prune,
-        # and the selection aggregate — without the persist the artifact
-        # token job runs three times (this is also the one EAGER action in
-        # an otherwise lazy plan builder; see build_kg's docstring)
-        art_all = _share(
-            c_one.select("_aid", "_atoks", "_cts", "_isc", "_rep").unionByName(d_one)
-        )
-        # size gate: the row-local selection broadcasts the WHOLE inventory
-        # as one array row and scores it per page — O(|artifacts|) per page.
-        # Above the gate, fall back to the groupBy hash-agg selections whose
-        # cost follows the (score > 0) candidate pairs instead. limit(+1):
-        # the probe only answers "over the gate?", never counts the corpus.
-        n_art = art_all.limit(_ROW_LOCAL_MAX_ARTIFACTS + 1).count()
-        if n_art > _ROW_LOCAL_MAX_ARTIFACTS:
-            scored = _share(
-                commit_context_scores(issues, commits, issue_arrays=toks)
-            )
-            sel_fb_commits, sel_fb_repair = commit_repair_selections(scored, commits)
-            parts.append(
-                link_commit_context(issues, commits, selected=sel_fb_commits)
-            )
-            parts.append(commit_method_triples(commits, entities))
-            parts.append(
-                link_repair_experience(issues, commits, selected=sel_fb_repair)
-            )
-            doc_pass, collidable = documentation_parts(
-                issues, docs, entities, issue_arrays=toks
-            )
-            parts.append(doc_pass)
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out, collidable
-        # vocabulary prune (same guard as score_artifacts): issue token
-        # arrays shrink to the artifact vocabulary before the per-artifact
-        # intersects, so each intersect is O(|shared candidates|).
-        # limit(max+1): never pull more than one row past the threshold.
-        vocab = [
-            r[0]
-            for r in art_all.select(F.explode("_atoks").alias("t"))
-            .distinct()
-            .limit(_VOCAB_PRUNE_MAX + 1)
-            .collect()
-        ]
-        it = toks
-        if 0 < len(vocab) <= _VOCAB_PRUNE_MAX:
-            it = toks.select(
-                "url",
-                "warc_ts",
-                F.array_intersect(
-                    "_itoks", F.array(*[F.lit(v) for v in sorted(vocab)])
-                ).alias("_itoks"),
-            )
-        art_one = art_all.agg(
-            F.collect_list(F.struct("_aid", "_isc", "_rep", "_cts", "_atoks")).alias(
-                "_arts"
-            )
-        )
-        wts = F.col("warc_ts").cast("double")
-        # element struct sorts ascending ≡ (score desc, committed_ts desc,
-        # commit_id asc) for commits resp. (score desc, doc_path asc) for
-        # docs (k2 = 0 constant there); isc/rep trail the unique (k1, k2,
-        # id) prefix so they never affect the order. score > 0 and the
-        # commit leakage guard apply to every family-selection, so they
-        # are folded into the shared filter before the sort.
-        scored = F.transform(
-            F.col("_arts"),
-            lambda a: F.struct(
-                (-F.size(F.array_intersect(F.col("_itoks"), a["_atoks"])).cast("long")).alias("k1"),
-                F.coalesce(-a["_cts"], F.lit(0.0)).alias("k2"),
-                a["_aid"].alias("id"),
-                a["_isc"].alias("isc"),
-                a["_rep"].alias("rep"),
-            ),
-        )
-        kept_sorted = F.array_sort(
-            F.filter(
-                scored,
-                lambda s: (s["k1"] < 0) & (~s["isc"] | (-s["k2"] <= wts)),
-            )
-        )
-        # explode(array(x)) is a Generate barrier: CollapseProject would
-        # otherwise inline the sort chain (45 intersects per page) into
-        # each of the three selection columns, tripling the scoring work
-        row = it.crossJoin(F.broadcast(art_one)).select(
-            "url", F.explode(F.array(kept_sorted)).alias("_s")
-        )
-        sel = _share(
-            row.select(
-                "url",
-                F.slice(
-                    F.filter("_s", lambda s: s["isc"]), 1, COMMIT_CONTEXT_LIMIT
-                ).alias("_ta"),
-                F.slice(
-                    F.filter(
-                        "_s",
-                        lambda s: s["isc"]
-                        & s["rep"]
-                        & (-s["k1"] >= REPAIR_EXPERIENCE_MIN_SCORE),
-                    ),
-                    1,
-                    REPAIR_EXPERIENCE_LIMIT,
-                ).alias("_tr"),
-                F.slice(
-                    F.filter("_s", lambda s: ~s["isc"]), 1, DOC_CONTEXT_LIMIT
-                ).alias("_td"),
-            )
-        )
-        sel_commits = sel.select("url", F.explode("_ta").alias("_k")).select(
-            "url", F.col("_k.id").alias("commit_id")
-        )
-        sel_repair = sel.select("url", F.explode("_tr").alias("_k")).select(
-            "url", F.col("_k.id").alias("commit_id")
-        )
-        sel_docs = sel.select("url", F.explode("_td").alias("_k")).select(
-            "url", F.col("_k.id").alias("doc_path")
-        )
-        parts.append(link_commit_context(issues, commits, selected=sel_commits))
+    if commits is not None:
+        parts.append(_commit_edges(sel_commits, elig))
         parts.append(commit_method_triples(commits, entities))
-        parts.append(link_repair_experience(issues, commits, selected=sel_repair))
-        doc_pass, collidable = documentation_parts(
-            issues, docs, entities, selected=sel_docs
-        )
+    if docs is not None:
+        doc_pass, collidable = documentation_parts(sel_docs, dels, entities)
         parts.append(doc_pass)
-    elif commits is not None:
-        scored = _share(commit_context_scores(issues, commits, issue_arrays=toks))
-        sel_commits, sel_repair = commit_repair_selections(scored, commits)
-        parts.append(link_commit_context(issues, commits, selected=sel_commits))
-        parts.append(commit_method_triples(commits, entities))
-        parts.append(link_repair_experience(issues, commits, selected=sel_repair))
-    elif docs is not None:
-        doc_pass, collidable = documentation_parts(
-            issues, docs, entities, issue_arrays=toks
-        )
-        parts.append(doc_pass)
-    if not parts:
-        return None, None
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out, collidable
+    return out, collidable, persisted
+
+
+def _row_local_selections(
+    toks: DataFrame, elig: DataFrame, docs: DataFrame
+) -> DataFrame | None:
+    """(url, _ta, _tr, _td) — the commit, repair and doc selections of every
+    page from ONE scoring pass and ZERO selection exchanges, or None when
+    the artifact inventory is over ``_ROW_LOCAL_MAX_ARTIFACTS``.
+
+    Every candidate row for a url derives from that url's single page row,
+    so the per-issue top-N is a ROW-LOCAL computation: broadcast the (tiny)
+    artifact table as ONE row carrying array<struct>, score all artifacts
+    per page with an array transform, sort once, and slice the commit /
+    repair / doc selections out of the sorted array — no |pages|×|artifacts|
+    pair materialization, no groupBy(url), no collect_list. (The groupBy
+    shape shuffled the 2.1M-row scored table into a 3×collect_list hash-agg
+    — ~3.5 s at 48k pages for work a projection can do.)
+
+    The artifact rows come to the driver in one bounded collect: it is the
+    size gate (the row-local selection is O(|artifacts|) per page, so above
+    the gate the caller falls back to the groupBy selections, whose cost
+    follows the (score > 0) candidate pairs), the vocabulary of the issue
+    token prune, and the broadcast row itself — at write time only the
+    broadcast of that one constant row runs for the artifact side.
+    """
+    c_one = (
+        # committed_ts IS NOT NULL: the standalone path's leakage guard
+        # (committed_ts <= warc_ts) drops null-timestamp commits from
+        # every selection; the fused sort key would coalesce null to
+        # epoch 0 and let them PASS — filter them here so both paths agree
+        elig.filter(F.col("committed_ts").isNotNull()).select(
+            F.col("commit_id").alias("_aid"),
+            F.lit(True).alias("_isc"),
+            F.coalesce(_is_repair(), F.lit(False)).alias("_rep"),
+            F.col("committed_ts").cast("double").alias("_cts"),
+            context_tokens(_commit_score_text()).alias("_atoks"),
+        )
+    )
+    d_one = docs.select(
+        F.col("doc_path").alias("_aid"),
+        F.lit(False).alias("_isc"),
+        F.lit(False).alias("_rep"),
+        F.lit(None).cast("double").alias("_cts"),
+        context_tokens(_doc_score_text()).alias("_atoks"),
+    )
+    # coalesce(1): one job that stops reading once the limit is reached,
+    # instead of the take() scale-up that runs one job per attempt
+    arts = (
+        c_one.unionByName(d_one)
+        .coalesce(1)
+        .limit(_ROW_LOCAL_MAX_ARTIFACTS + 1)
+        .collect()
+    )
+    if len(arts) > _ROW_LOCAL_MAX_ARTIFACTS:
+        return None
+    it = _prune_to_vocab(toks, {t for a in arts for t in a["_atoks"]})
+    # the inventory as ONE broadcast row built in the JVM: from_json of a
+    # literal is constant-folded into an array literal, so no artifact-side
+    # scan runs again and no Python-side RDD (a createDataFrame would need
+    # a Python worker at write time). JSON carries strings, doubles and
+    # nulls exactly.
+    inventory = toks.sparkSession.range(1).select(
+        F.from_json(
+            F.lit(json.dumps([a.asDict(recursive=True) for a in arts])),
+            "array<struct<_aid:string,_isc:boolean,_rep:boolean,"
+            "_cts:double,_atoks:array<string>>>",
+        ).alias("_arts")
+    )
+    wts = F.col("warc_ts").cast("double")
+    # element struct sorts ascending ≡ (score desc, committed_ts desc,
+    # commit_id asc) for commits resp. (score desc, doc_path asc) for
+    # docs (k2 = 0 constant there); isc/rep trail the unique (k1, k2,
+    # id) prefix so they never affect the order. score > 0 and the
+    # commit leakage guard apply to every family-selection, so they
+    # are folded into the shared filter before the sort.
+    scored = F.transform(
+        F.col("_arts"),
+        lambda a: F.struct(
+            (-F.size(F.array_intersect(F.col("_itoks"), a["_atoks"])).cast("long")).alias("k1"),
+            F.coalesce(-a["_cts"], F.lit(0.0)).alias("k2"),
+            a["_aid"].alias("id"),
+            a["_isc"].alias("isc"),
+            a["_rep"].alias("rep"),
+        ),
+    )
+    kept_sorted = F.array_sort(
+        F.filter(
+            scored,
+            lambda s: (s["k1"] < 0) & (~s["isc"] | (-s["k2"] <= wts)),
+        )
+    )
+    # explode(array(x)) is a Generate barrier: CollapseProject would
+    # otherwise inline the sort chain (45 intersects per page) into
+    # each of the three selection columns, tripling the scoring work
+    row = it.crossJoin(F.broadcast(inventory)).select(
+        "url", F.explode(F.array(kept_sorted)).alias("_s")
+    )
+    return row.select(
+        "url",
+        F.slice(
+            F.filter("_s", lambda s: s["isc"]), 1, COMMIT_CONTEXT_LIMIT
+        ).alias("_ta"),
+        F.slice(
+            F.filter(
+                "_s",
+                lambda s: s["isc"]
+                & s["rep"]
+                & (-s["k1"] >= REPAIR_EXPERIENCE_MIN_SCORE),
+            ),
+            1,
+            REPAIR_EXPERIENCE_LIMIT,
+        ).alias("_tr"),
+        F.slice(
+            F.filter("_s", lambda s: ~s["isc"]), 1, DOC_CONTEXT_LIMIT
+        ).alias("_td"),
+    )
 
 
 def context_triples(
@@ -876,12 +847,10 @@ def context_triples(
     entities: DataFrame,
     commits: DataFrame | None = None,
     docs: DataFrame | None = None,
-    issue_arrays: DataFrame | None = None,
 ) -> DataFrame | None:
-    """All context stages unioned; None when no context inputs exist."""
-    passthrough, collidable = context_triples_parts(
-        issues, entities, commits, docs, issue_arrays
-    )
+    """All context stages unioned; None when no context inputs exist. The
+    selections it persists stay cached (see ``context_triples_parts``)."""
+    passthrough, collidable, _ = context_triples_parts(issues, entities, commits, docs)
     if passthrough is None:
         return None
     if collidable is not None:

@@ -145,10 +145,12 @@ def build_kg_from_sources(
     cutoff: datetime | None = None,
     include_reverse: bool = False,
     persist: bool = False,
-) -> dict[str, DataFrame]:
+) -> dict[str, DataFrame | list[DataFrame]]:
     """Fully self-contained variant (SURVEY.md §7.1 step 3): the alias
     dictionary is PARSED from ``source_files(file_path, source)`` instead of
-    supplied, and call-graph `calls method` triples (J9) are added."""
+    supplied, and call-graph `calls method` triples (J9) are added.
+    ``persist=True`` also persists the parsed inventory; it joins
+    ``out["persisted"]`` (see ``build_kg``)."""
     from .functions.code_entities import (
         call_graph_edges,
         extract_call_sites,
@@ -168,6 +170,8 @@ def build_kg_from_sources(
         triples = with_reverse_edges(triples)
     out["triples"] = triples
     out["entities"] = entities
+    if persist:
+        out["persisted"].append(entities)
     return out
 
 
@@ -180,7 +184,7 @@ def build_kg(
     commits: DataFrame | None = None,
     docs: DataFrame | None = None,
     canonicalize: bool = False,
-) -> dict[str, DataFrame]:
+) -> dict[str, DataFrame | list[DataFrame]]:
     """Full pipeline. Returns the stage DataFrames (lazy).
 
     ``commits`` (commit_id, message, committed_ts, changed_files,
@@ -188,24 +192,30 @@ def build_kg(
     artifacts; when supplied, the commit / repair-experience / documentation
     link stages run too (operators/context.py) — all 17 predicate pairs.
 
-    ``persist=True`` caches the prepared pages and the mentions (see
-    ``link_stage``). Caller owns unpersist.
+    ``out["persisted"]`` lists every DataFrame this call persisted: the
+    prepared pages and the mentions with ``persist=True`` (see
+    ``link_stage``), and the context stage's per-issue selections whenever
+    ``commits`` or ``docs`` are given. The caller owns them: unpersist each
+    once the triples are written.
 
     ``canonicalize=True`` appends the north-rule canonicalization stage
-    (``operators/canonicalize.py``): entity spelling variants merge via CC
-    union-find over natural keys and triples are rewritten through the
-    mapping (returned as ``out["canonical_mapping"]``). It adds one full
-    (subj, predicate, obj) re-dedup exchange, so the scoped-MERGE
+    (``operators/canonicalize.py``): entity spelling variants that share a
+    natural key map to the key's min entity id, and triples are rewritten
+    through the mapping (returned as ``out["canonical_mapping"]``). It adds
+    one full (subj, predicate, obj) re-dedup exchange, so the scoped-MERGE
     optimization above is superseded on that path; default off.
 
-    NOT fully lazy when ``commits``/``docs`` are supplied: the context
-    stage runs two small driver-side actions at plan-construction time —
-    the row-local size-gate probe (``limit(N+1).count()``) and the
-    capped vocabulary-prune collect (``operators/context.py``); both are
-    bounded by their limits regardless of corpus size.
+    NOT fully lazy when ``commits`` and ``docs`` are both supplied: the
+    context stage runs one driver-side collect at plan-construction time —
+    the artifact token rows, capped at the row-local size gate
+    (``operators/context.py``), which sizes the selection path and supplies
+    the vocabulary prune. It is bounded by its limit regardless of corpus
+    size. With only one of them, the vocabulary collect of
+    ``score_artifacts`` runs instead.
     """
     out = link_stage(pages, entities, cutoff, persist)
     prepared = out["prepared"]
+    persisted = [prepared, out["mentions"]] if persist else []
     triples = links_to_triples(out["links"]).unionByName(
         structural_triples(entities).select(
             "subj", "predicate", "obj", "weight", "src_url"
@@ -220,9 +230,10 @@ def build_kg(
         # scoring pass inside context_triples_parts), which persists its own
         # scored output — materializing an exploded index here cost ~3 s a
         # run at 48k pages for nothing
-        ctx_pass, ctx_merge = context_triples_parts(
+        ctx_pass, ctx_merge, ctx_persisted = context_triples_parts(
             issues, entities, commits=commits, docs=docs
         )
+        persisted += ctx_persisted
         # MERGE semantics across sources: keep the strongest (min) weight
         # per (subj, predicate, obj) — a doc-derived ×1.5 link must not
         # override a direct STRONG link. Only the collidable part (doc
@@ -239,9 +250,8 @@ def build_kg(
             triples = triples.unionByName(ctx_pass)
     canonical = None
     if canonicalize:
-        # north-rule canonicalization stage: CC union-find over the
-        # entity↔natural-key bipartite graph (the reference's MERGE-on-
-        # natural-key identity guarantee as an equivalence closure), then
+        # north-rule canonicalization stage: min entity id per natural key
+        # (the reference's MERGE-on-natural-key identity guarantee), then
         # subj/obj rewritten through the broadcast mapping with MERGE
         # re-dedup. Identity mappings (no spelling variants) pass triples
         # through value-unchanged.
@@ -252,6 +262,7 @@ def build_kg(
     if include_reverse:
         triples = with_reverse_edges(triples)
     out["triples"] = triples
+    out["persisted"] = persisted
     if canonical is not None:
         out["canonical_mapping"] = canonical
     return out

@@ -15,6 +15,17 @@ from pyspark.sql import SparkSession
 from .config import DEFAULT_SHUFFLE_PARTITIONS
 
 
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else an eighth of the host's physical
+    memory (MemTotal/8, the rule perfbench sizes its heap by): a fixed
+    default either exceeds a small host or wastes a big one."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{total // 8 // 2**20}m"
+
+
 def get_spark(
     app_name: str = "kgcompass_spark",
     cores: int | None = None,
@@ -42,6 +53,7 @@ def get_spark(
     if master is None:
         n = cores or os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{n}]" if n else "local[*]"
+    mem = _driver_memory()
     sp = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
     )
@@ -67,24 +79,35 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
+        # PySpark 4 records the Python call site of every DataFrame/Column
+        # call for error messages: each F.* call then pays extra py4j round
+        # trips to read the conf and set/clear the origin in the JVM.
+        # scripts/plan_cost.py (perfbench build inputs, seed 1, 4-core
+        # host) counts the round trips of one build_kg plan at 9.0k with it
+        # on and 4.3k with it off (15.1k -> 8.2k on the code before the
+        # context-stage literal tables). Errors keep their class, message
+        # and plan; only the Python call-site context is dropped. PySpark
+        # reads it once per process, so it must be set before the session
+        # starts.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Pin the heap floor to the ceiling and the collector to G1: with
         # the default tiny -Xms the local-mode JVM spends the first minutes
         # resizing the heap, and identical plans were measured 2× apart in
         # one session on an idle box (round-4 verdict) — heap ergonomics,
         # not hypervisor steal. -Xmx itself must come from
         # spark.driver.memory (Spark rejects it in extraJavaOptions).
-        # The pin is OPT-IN (SPARK_GRAFT_PIN_HEAP=1, set by bench.py): a
-        # 24 GB -Xms floor on every library/test session would fail or
-        # thrash on smaller hosts where the lazily-grown heap works fine
+        # The pin is OPT-IN (SPARK_GRAFT_PIN_HEAP=1, set by bench.py): an
+        # -Xms floor on every library/test session would reserve the whole
+        # heap up front where the lazily-grown heap works fine
         # (ADVICE round 5).
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get(
                 "SPARK_GRAFT_DRIVER_JAVA_OPTS",
                 "-Djava.net.preferIPv4Stack=true -Xms"
-                + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+                + mem
                 + " -XX:+UseG1GC"
                 if os.environ.get("SPARK_GRAFT_PIN_HEAP", "0") == "1"
                 else "-Djava.net.preferIPv4Stack=true",

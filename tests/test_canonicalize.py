@@ -1,6 +1,10 @@
 """Canonicalization: path-spelling variants merge into one entity
-(the fl.py:391-414 bug class, solved by CC union-find)."""
+(the fl.py:391-414 bug class, solved by grouping on the natural key)."""
 
+import random
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from kgcompass_spark.operators.canonicalize import (
@@ -135,3 +139,76 @@ def test_build_kg_canonicalize_merges_variant_entities(spark):
     plain = build_kg(pages, entities, cutoff=CUTOFF)["triples"]
     canon = build_kg(pages, entities, cutoff=CUTOFF, canonicalize=True)["triples"]
     assert {tuple(r) for r in plain.collect()} == {tuple(r) for r in canon.collect()}
+
+
+def _py_normalize(path):
+    p = re.sub(r"/{2,}", "/", path.replace("\\", "/"))
+    p = re.sub(r"^\./", "", p)
+    return re.sub(r"^playground/[^/]+/", "", p)
+
+
+def _py_union_find_mapping(rows):
+    """Reference: union-find over the entity↔natural-key bipartite graph,
+    canonical id = min entity id per component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for eid, kind, name, path in rows:
+        norm = _py_normalize(path)
+        key = kind + "§" + (norm if kind in ("file", "directory") else f"{name}@{norm}")
+        a, b = find(("e", eid)), find(("k", key))
+        if a != b:
+            parent[a] = b
+    members = {}
+    for eid, *_ in rows:
+        members.setdefault(find(("e", eid)), set()).add(eid)
+    return {e: min(ms) for ms in members.values() for e in ms}
+
+
+def _random_inventory(seed):
+    """Entities whose ids derive from (kind, name, raw path), as every
+    inventory of the package does, over spelling variants of a few paths
+    (``./``, backslashes, ``//``, a playground prefix) plus exact duplicate
+    rows."""
+    rng = random.Random(seed)
+    spellings = [
+        lambda p: p,
+        lambda p: "./" + p,
+        lambda p: p.replace("/", "\\"),
+        lambda p: p.replace("/", "//"),
+        lambda p: "playground/repo/" + p,
+    ]
+    rows = []
+    for i in range(rng.randint(8, 16)):
+        path = "/".join(f"d{rng.randint(0, 3)}" for _ in range(rng.randint(1, 3))) + f"/m{i % 5}.py"
+        for spell in rng.sample(spellings, rng.randint(1, len(spellings))):
+            p = spell(path)
+            rows.append((f"file:{p}", "file", p, p))
+            for name in rng.sample(["f", "g", "C", "C.h"], rng.randint(0, 3)):
+                kind = "class" if name == "C" else "method"
+                rows.append((f"{kind}:{name}@{p}", kind, name, p))
+    rows += rng.sample(rows, len(rows) // 5)  # exact duplicate rows
+    rng.shuffle(rows)
+    return rows
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_canonical_mapping_equals_union_find(spark, seed):
+    """The group-by mapping equals the union-find closure over (entity_id,
+    nat_key) on randomized inventories: every entity once, spelling
+    variants merged, duplicates harmless."""
+    rows = _random_inventory(seed)
+    ents = spark.createDataFrame(
+        [(e, k, n, "", "", p, 0, 0, "", []) for e, k, n, p in rows], ENT_SCHEMA
+    )
+    got = canonical_mapping(ents).collect()
+    want = _py_union_find_mapping(rows)
+    assert len(got) == len({r["entity_id"] for r in got})  # one row per entity
+    assert {r["entity_id"]: r["canonical_id"] for r in got} == want
+    assert sum(e != c for e, c in want.items()) > 0  # variants did merge

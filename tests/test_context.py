@@ -210,7 +210,7 @@ def test_fused_selections_equal_standalone_paths(spark, full_corpus, gate, monke
         monkeypatch.setattr(ctx_mod, "_ROW_LOCAL_MAX_ARTIFACTS", gate)
     pages, entities, _, commits, docs, _ = full_corpus
     issues = prepare_pages(pages, CUTOFF).select("url", "warc_ts", "clean_text")
-    ctx_pass, ctx_merge = context_triples_parts(
+    ctx_pass, ctx_merge, _ = context_triples_parts(
         issues, entities, commits=commits, docs=docs
     )
     fused = {
