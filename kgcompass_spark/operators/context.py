@@ -847,12 +847,11 @@ def context_triples(
     entities: DataFrame,
     commits: DataFrame | None = None,
     docs: DataFrame | None = None,
-) -> DataFrame | None:
-    """All context stages unioned; None when no context inputs exist. The
-    selections it persists stay cached (see ``context_triples_parts``)."""
-    passthrough, collidable, _ = context_triples_parts(issues, entities, commits, docs)
-    if passthrough is None:
-        return None
+) -> tuple[DataFrame | None, list[DataFrame]]:
+    """All context stages unioned, and the frames persisted for them (see
+    ``context_triples_parts``), which the caller unpersists once it has run
+    its action; (None, []) when no context inputs exist."""
+    passthrough, collidable, persisted = context_triples_parts(issues, entities, commits, docs)
     if collidable is not None:
         passthrough = passthrough.unionByName(collidable.distinct())
-    return passthrough
+    return passthrough, persisted

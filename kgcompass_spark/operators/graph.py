@@ -16,16 +16,33 @@
 
 Iteration hygiene (SURVEY.md §4.2): every loop ``localCheckpoint``s each
 round to cut lineage — without it the plan doubles per iteration and the
-driver OOMs planning, not executing. Convergence checks are single scalar
-aggregates.
+driver OOMs planning, not executing. Except in ``bounded_sssp`` (the
+single-root reference), a round's delta is a filter over its one
+checkpoint, whose own job counts it (``_materialize``): no probe jobs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..config import SIMILARITY_CANDIDATE_CAP
+
+
+def _materialize(
+    df: DataFrame, flag: Column, spill_path: str | None = None
+) -> tuple[DataFrame, int]:
+    """``localCheckpoint`` ``df`` (or write it to ``spill_path`` and read it
+    back) and count its rows where ``flag`` holds as an observed metric of
+    that same job. A sum over no rows is null: 0."""
+    obs = Observation()
+    df = df.observe(obs, F.sum(F.when(flag, 1)).alias("n"))
+    if spill_path is None:
+        df = df.localCheckpoint(eager=True)
+    else:
+        df.write.mode("overwrite").parquet(spill_path)
+        df = df.sparkSession.read.parquet(spill_path)
+    return df, obs.get["n"] or 0
 
 
 def bounded_sssp(
@@ -122,22 +139,21 @@ def bounded_sssp_multi(
 
     ``roots``: one column ``root``. Returns (root, node, cost, hops).
     Per round one shuffle: frontier ⋈ edges on the node, then a
-    (root, node) min window. Path structs are omitted (they multiply state
-    by path width × roots; use bounded_sssp for per-root path details).
+    (root, node) min aggregate, checkpointed. Path structs are omitted (they
+    multiply state by path width × roots; use bounded_sssp for per-root path
+    details).
     """
     e = edges.select(
         F.col("subj").alias("src"),
         F.col("obj").alias("dst"),
         F.col("weight").cast("double"),
     ).localCheckpoint(eager=True)
-    frontier = roots.select(
+    best = frontier = roots.select(
         F.col("root"),
         F.col("root").alias("node"),
         F.lit(0.0).alias("cost"),
         F.lit(0).alias("hops"),
-    )
-    best = frontier.localCheckpoint(eager=True)
-    frontier = best
+    ).localCheckpoint(eager=True)
     for _ in range(max_hops):
         nxt = (
             frontier.join(e, frontier["node"] == e["src"])
@@ -146,6 +162,7 @@ def bounded_sssp_multi(
                 F.col("dst").alias("node"),
                 (F.col("cost") + F.col("weight")).alias("cost"),
                 (F.col("hops") + 1).alias("hops"),
+                F.lit(None).cast("double").alias("_oc"),
             )
         )
         if max_cost is not None:
@@ -153,40 +170,31 @@ def bounded_sssp_multi(
         # min(struct) hash-agg, NOT a row_number window: the partial
         # aggregate combines map-side, so the shuffle carries one candidate
         # per (partition, root, node) instead of sorting every generated
-        # path row (state here is |roots| × |reachable| — millions)
-        merged = best.unionByName(nxt)
-        new_best = (
+        # path row (state here is |roots| × |reachable| — millions). The old
+        # cost rides along as min(_oc), null on new rows: the frontier is
+        # the STRICTLY IMPROVED pairs (not those merely re-reached)
+        merged = best.withColumn("_oc", F.col("cost")).unionByName(nxt)
+        improved = F.col("_oc").isNull() | (F.col("cost") < F.col("_oc"))
+        state, n_changed = _materialize(
             merged.groupBy("root", "node")
-            .agg(F.min(F.struct("cost", "hops")).alias("_b"))
-            .select("root", "node", F.col("_b.cost").alias("cost"), F.col("_b.hops").alias("hops"))
-            .localCheckpoint(eager=True)
+            .agg(F.min(F.struct("cost", "hops")).alias("_b"), F.min("_oc").alias("_oc"))
+            .select("root", "node", "_b.*", "_oc"),
+            improved,
         )
-        # frontier = STRICTLY IMPROVED pairs (semi-joining against nxt would
-        # re-propagate nodes that were merely re-reached at a worse cost)
-        changed = new_best.join(
-            best.select("root", "node", F.col("cost").alias("_oc")),
-            ["root", "node"],
-            "left",
-        ).filter(F.col("_oc").isNull() | (F.col("cost") < F.col("_oc"))).drop("_oc")
-        changed = changed.localCheckpoint(eager=True)
-        best = new_best
-        # count on the materialized delta is ~free; the per-root row_number
-        # window (a sort of the whole delta) only runs when some root can
-        # actually exceed the cap — on most rounds the frontier is far
-        # below it and the sort would be pure overhead
-        n_changed = changed.count()
+        best = state.drop("_oc")
         if n_changed == 0:
             break
+        frontier = state.filter(improved).drop("_oc")
+        # the per-root row_number window (a sort of the whole delta) only
+        # runs when some root can actually exceed the cap — on most rounds
+        # the frontier is far below it and the sort would be pure overhead
         if n_changed > frontier_cap:
             wc = Window.partitionBy("root").orderBy(F.asc("cost"), F.asc("node"))
             frontier = (
-                changed.withColumn("_rn", F.row_number().over(wc))
+                frontier.withColumn("_rn", F.row_number().over(wc))
                 .filter(F.col("_rn") <= frontier_cap)
                 .drop("_rn")
-                .localCheckpoint(eager=True)
             )
-        else:
-            frontier = changed
     return best
 
 
@@ -297,18 +305,17 @@ def seeded_support(
                 "root", "seed", F.col("seed").alias("node"), F.lit(1).alias("hops")
             )
         )
-    best = hop1.localCheckpoint(eager=True)
-    frontier = best
-    if hop1_expand_excludes:
-        frontier = frontier.filter(
-            ~F.split(F.col("node"), ":", 2)[0].isin(*hop1_expand_excludes)
-        )
-    n_front = frontier.count()
+    expands = (
+        ~F.split(F.col("node"), ":", 2)[0].isin(*hop1_expand_excludes)
+        if hop1_expand_excludes
+        else F.lit(True)
+    )
+    best, n_front = _materialize(hop1, expands)
+    frontier = best.filter(expands)
     for h in range(2, max_hops + 1):
         fr = frontier
         # the per-(root, seed) cap window sorts the whole frontier — apply
-        # it only when some seed could exceed the cap (frontier is already
-        # materialized, so the count is ~free)
+        # it only when some seed could exceed the cap
         if frontier_cap is not None and n_front > frontier_cap:
             wf = Window.partitionBy("root", "seed").orderBy(F.asc("node"))
             fr = (
@@ -415,22 +422,16 @@ def seeded_support(
             )
         if last_round:
             # the delta frontier exists only to feed the NEXT round — on
-            # the final round it would be a full-state join + checkpoint +
-            # count that nothing consumes; the un-checkpointed state flows
-            # straight into the final reduction below
+            # the final round the state flows straight into the reduction
             best = new_best
             break
-        new_best = new_best.localCheckpoint(eager=True)
-        changed = new_best.join(
-            best.select("root", "seed", "node", F.col("hops").alias("_oh")),
-            ["root", "seed", "node"],
-            "left",
-        ).filter(F.col("_oh").isNull() | (F.col("hops") < F.col("_oh"))).drop("_oh")
-        frontier = changed.localCheckpoint(eager=True)
-        best = new_best
-        n_front = frontier.count()
+        # the old hops ride in min-hops: every key already in ``best`` has
+        # hops < h, so hops == h exactly on the keys new this round
+        improved = F.col("hops") == h
+        best, n_front = _materialize(new_best, improved)
         if n_front == 0:
             break
+        frontier = best.filter(improved)
     # --- final per-(root, node) reduction: ONE hash-agg ---------------------
     # (root, seed, node) is unique in ``best`` (hop1 is per-key unique and
     # every merge is a groupBy on the key), so "distinct seeds at the min
@@ -552,8 +553,9 @@ def connected_components(
          table means the k jump joins share one cheap build-side scan
          instead of re-executing the round's plan k times (the round-5
          shape recomputed the un-materialized plan per jump level).
-      4. Per-round ``localCheckpoint`` + a changed-row count on the
-         checkpointed (AQE-coalesced, lineage-free) table. A/B'd against
+      4. Per-round ``localCheckpoint`` whose own job counts the relabeled
+         rows (``_materialize``; so do the up-front ones for the size
+         gates): no probe job. A/B'd against
          persist()+fused count: persist keeps the full logical plan alive,
          so analysis cost and 32-task cached stages grow each round
          (1.0→1.7 s/round) where the checkpoint rounds stay flat at
@@ -626,19 +628,20 @@ def connected_components(
         # requirement; callers whose edges are distinct by construction pass
         # dedup_edges=False and the symmetrize step becomes fully narrow.
         sym = sym.distinct()
-    sym = sym.localCheckpoint(eager=True)  # materialize: reused every round
+    sym, n_edges = _materialize(sym, F.lit(True))  # reused every round
     id_type = sym.schema["u"].dataType  # node ids: any orderable type
-    # one cheap count on the materialized edges decides the join strategy
-    small = sym.count() <= broadcast_max_edges
+    small = n_edges <= broadcast_max_edges
     B = F.broadcast if small else (lambda df: df)
     # parent pointers: node → min(neighbor ∪ self); every node starts dirty
-    parent = (
+    # (the rounds never add or drop a node: n_nodes is the output's count)
+    parent, n_nodes = _materialize(
         sym.groupBy("u")
         .agg(F.least(F.min("v"), F.first("u")).alias("p"))
-        .select(F.col("u").alias("node"), F.least(F.col("p"), F.col("node")).alias("comp"))
-    ).localCheckpoint(eager=True)
+        .select(F.col("u").alias("node"), F.least(F.col("p"), F.col("node")).alias("comp")),
+        F.lit(True),
+    )
     changed = parent
-
+    relabeled = F.col("comp") != F.col("_old")
     for _r in range(max_iter):
         # propagate newly-lowered labels (delta frontier) + carry the old
         # label, in a single aggregation: contribution rows have old=null,
@@ -677,24 +680,16 @@ def connected_components(
                 F.least(F.col("comp"), F.coalesce(F.col("comp2"), F.col("comp"))).alias("comp"),
                 "_old",
             )
-        if spill_every and (_r + 1) % spill_every == 0:
-            # stats-reset spill (decision 6): alternate two slots so the
-            # overwrite never clobbers the file a live plan still reads
-            path = f"{spill_base}_{(_r // spill_every) % 2}"
-            jumped.write.mode("overwrite").parquet(path)
-            jumped = edges.sparkSession.read.parquet(path)
-            spill_used = True
-        else:
-            jumped = jumped.localCheckpoint(eager=True)
-        changed = jumped.filter(F.col("comp") != F.col("_old")).select("node", "comp")
+        # stats-reset spill (decision 6): alternate two slots so the
+        # overwrite never clobbers the file a live plan still reads
+        spill = spill_every > 0 and (_r + 1) % spill_every == 0
+        spill_used |= spill
+        jumped, n_changed = _materialize(
+            jumped, relabeled, f"{spill_base}_{(_r // spill_every) % 2}" if spill else None
+        )
+        changed = jumped.filter(relabeled).select("node", "comp")
         parent = jumped.select("node", "comp")
-        # convergence probe: isEmpty short-circuits at the first changed
-        # row on non-converged rounds (a count scans everything), and
-        # round 0 is never probed — the init round changes essentially
-        # every node, so its probe is a guaranteed-wasted job (measured
-        # A/B: 5.06 vs 5.54 s best on the g8 entry). Worst case for the
-        # skip is one extra (empty) round on a trivially-converged input.
-        if _r >= 1 and changed.isEmpty():
+        if n_changed == 0:
             break
     out = parent.select(F.col("node"), F.col("comp").alias("component"))
     if spill_used and spill_dir is None:
@@ -707,12 +702,11 @@ def connected_components(
     # the checkpointed result has UNKNOWN stats downstream (ExistingRDD), so
     # consumers joining the component table back against their node tables
     # never get an auto-broadcast even when it is tiny. Hint it explicitly
-    # while it is small enough (a count on the checkpointed table is one
-    # cheap job): the in-loop gate already commits to broadcasting
-    # node-keyed tables of this size every round, so the hint adds no new
-    # memory envelope. Measured (round 7, sf1 g8): the singleton left join
-    # against all 1.5M orders drops its shuffle, ~1.5 s.
-    if small and out.count() <= 4_000_000:
+    # while it is small enough: the in-loop gate already commits to
+    # broadcasting node-keyed tables of this size every round, so the hint
+    # adds no new memory envelope. Measured (round 7, sf1 g8): the singleton
+    # left join against all 1.5M orders drops its shuffle, ~1.5 s.
+    if small and n_nodes <= 4_000_000:
         out = F.broadcast(out)
     return out
 
@@ -750,14 +744,11 @@ def _power_iteration(
     return ranks.select("node", (F.col("rank") / F.lit(mx)).alias("score"))
 
 
-def _nodes_of(e: DataFrame) -> DataFrame:
-    """Distinct endpoints of (src, dst), checkpointed: every round joins it."""
-    return (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+def _nodes_of(e: DataFrame) -> tuple[DataFrame, int]:
+    """Distinct endpoints of (src, dst), checkpointed (every round joins
+    it), and their count."""
+    nodes = e.select(F.col("src").alias("node")).unionByName(e.select(F.col("dst").alias("node")))
+    return _materialize(nodes.distinct(), F.lit(True))
 
 
 def candidate_graph_rank(
@@ -777,7 +768,7 @@ def candidate_graph_rank(
     Returns (node, score) with score in [0, 1].
     """
     e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    seed = _nodes_of(e).select(
+    seed = _nodes_of(e)[0].select(
         "node",
         F.when(F.col("node") == root, F.lit(1.0)).otherwise(F.lit(0.0)).alias("rank0"),
         F.lit(1.0).alias("teleport"),
@@ -804,10 +795,10 @@ def pagerank(
     e = edges.select(
         F.col("subj").alias("src"), F.col("obj").alias("dst")
     ).localCheckpoint(eager=True)
-    nodes = _nodes_of(e)
+    nodes, n_nodes = _nodes_of(e)
     if personalized_root is not None:
         base = F.when(F.col("node") == personalized_root, F.lit(1.0)).otherwise(F.lit(0.0))
     else:
-        base = F.lit(1.0 / nodes.count())
+        base = F.lit(1.0 / n_nodes)
     seed = nodes.select("node", base.alias("rank0"), base.alias("teleport"))
     return _power_iteration(e, seed, alpha, iters)

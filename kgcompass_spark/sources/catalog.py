@@ -180,17 +180,23 @@ def run_pipeline_checkpointed(
     if commits is not None or docs is not None:
         from ..operators.context import context_triples
 
-        ctx = cat.run_stage(
-            "context",
-            lambda: context_triples(
+        persisted = []
+
+        def build_context():
+            ctx, held = context_triples(
                 prepared.select("url", "warc_ts", "clean_text"),
                 entities,
                 commits=commits,
                 docs=docs,
-            ),
-            fingerprint,
-            bucket_col="subj",
-        )
+            )
+            persisted.extend(held)
+            return ctx
+
+        ctx = cat.run_stage("context", build_context, fingerprint, bucket_col="subj")
+        # the snapshot is written: the selections it was scored from are not
+        # read again
+        for df in persisted:
+            df.unpersist()
 
     def build_triples():
         t = links_to_triples(links).unionByName(

@@ -1,8 +1,9 @@
 """Local mimic of the driver correctness gate: run every queries() entry at
 sf0.01 and compare against oracle_sql() via DuckDB (row count + sorted
 rounded values). Usage: python3 scripts/check_oracle.py [query ...]"""
+import os
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import math
 

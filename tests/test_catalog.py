@@ -102,3 +102,32 @@ def test_pipeline_resume_with_context(spark, tmp_path):
     # context predicates present in the snapshot
     preds = {r.predicate for r in out1b["context"].select("predicate").distinct().collect()}
     assert "points to commit" in preds and "points to documentation" in preds
+
+
+def _cached_rdds(spark) -> int:
+    """Persistent RDDs that are not local checkpoints: the garbage
+    collector frees other tests' checkpoints at any time."""
+    rdds = spark.sparkContext._jsc.sc().getPersistentRDDs().values().iterator()
+    n = 0
+    while rdds.hasNext():
+        n += not rdds.next().isLocallyCheckpointed()
+    return n
+
+
+def test_pipeline_context_frees_its_selections(spark, tmp_path):
+    """The staged build unpersists the context selections once the context
+    snapshot is written: the cached-RDD count is back to its value before
+    the call."""
+    from kgcompass_spark.sources.datagen import context_corpus_dataframes
+
+    # fresh inputs: a plan another test already cached would be shared
+    pages, entities, _, _ = corpus_dataframes(spark, n_pages=40)
+    commits, docs, _ = context_corpus_dataframes(spark, n_pages=40)
+    before = _cached_rdds(spark)
+    out = run_pipeline_checkpointed(
+        spark, pages, entities, str(tmp_path / "wh"), cutoff=CUTOFF,
+        commits=commits, docs=docs,
+    )
+    assert out["catalog"].has_stage("context")
+    assert out["context"].count() > 0
+    assert _cached_rdds(spark) == before

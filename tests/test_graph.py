@@ -4,8 +4,10 @@ from pyspark.sql import functions as F
 
 from kgcompass_spark.operators.graph import (
     bounded_sssp,
+    bounded_sssp_multi,
     connected_components,
     pagerank,
+    seeded_support,
 )
 
 
@@ -184,3 +186,48 @@ def test_connected_components_random_vs_union_find(spark):
         assert set(got.values()) == {
             c for x, c in expected.items() if x in got
         }
+
+
+def test_connected_components_spill_equals_union_find(spark, tmp_path, monkeypatch):
+    """spill_every=1: every round goes through the parquet write and
+    read-back, alternating two slots under the temp dir. Each node gets the
+    smallest id of its component, as a union-find gives, and no slot is left
+    afterwards."""
+    import os
+    import tempfile
+
+    from pyspark.sql import DataFrameWriter
+
+    rows = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(40)]
+    rows += [("x1", "x0"), ("x2", "x1")]
+    e = spark.createDataFrame(rows, "src string, dst string")
+    written = []
+    write = DataFrameWriter.parquet
+
+    def recorded(self, path, *args, **kwargs):
+        written.append(path)
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(DataFrameWriter, "parquet", recorded)
+    out = {r["node"]: r["component"] for r in connected_components(e, spill_every=1).collect()}
+    expected = {f"n{i:02d}": "n00" for i in range(41)}
+    expected.update({"x0": "x0", "x1": "x0", "x2": "x0"})
+    assert out == expected
+    assert len(set(written)) == 2
+    assert all(p.startswith(str(tmp_path)) for p in written)
+    assert not [f for f in os.listdir(tmp_path) if f.startswith("cc_spill_")]
+
+
+def test_iterative_operators_empty_edges_and_absent_roots(spark):
+    """No edges, or roots the graph does not contain: the multi-root SSSP
+    keeps each root at cost 0, support is empty, and CC of no edges is
+    empty."""
+    roots = spark.createDataFrame([("zz",)], "root string")
+    for e in (edges_df(spark, []), edges_df(spark, [("a", "p", "b", 1.0)])):
+        got = [tuple(r) for r in bounded_sssp_multi(e, roots).collect()]
+        assert got == [("zz", "zz", 0.0, 0)]
+        assert seeded_support(e, roots).collect() == []
+        assert seeded_support(e, roots, path_k=1).collect() == []
+    empty = spark.createDataFrame([], "src string, dst string")
+    assert connected_components(empty).collect() == []

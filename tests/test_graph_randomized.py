@@ -276,3 +276,92 @@ def test_pagerank_random_vs_power_iteration_deep(spark):
     assert set(got) == set(expected)
     for v, s in got.items():
         assert abs(s - expected[v]) < 1e-9, (v, s, expected[v])
+
+
+def _capped_sssp_reference(edges, roots, max_hops, cap):
+    """bounded_sssp_multi's rounds in pure Python: the (cost, hops) minimum
+    per (root, node); the next frontier is the strictly improved pairs, cut
+    to the ``cap`` cheapest (then smallest node) per root."""
+    best = {(r, r): (0.0, 0) for r in roots}
+    frontier = dict(best)
+    for _ in range(max_hops):
+        new = dict(best)
+        for (root, node), (c, h) in frontier.items():
+            for s, d, w in edges:
+                if s == node and ((root, d) not in new or (c + w, h + 1) < new[(root, d)]):
+                    new[(root, d)] = (c + w, h + 1)
+        changed = {k: v for k, v in new.items() if k not in best or v[0] < best[k][0]}
+        best = new
+        if not changed:
+            break
+        frontier = {}
+        for root in roots:
+            mine = sorted((v[0], k[1]) for k, v in changed.items() if k[0] == root)
+            frontier.update({(root, n): changed[(root, n)] for _, n in mine[:cap]})
+    return best
+
+
+def _capped_support_reference(edges, roots, max_hops, cap, excludes=()):
+    """seeded_support's rounds in pure Python: BFS state per (root, seed,
+    node); each round expands at most ``cap`` frontier nodes per (root,
+    seed), the smallest node ids first. Returns (root, node) -> (distance,
+    support)."""
+    adj = {}
+    for s, d in sorted(_collapsed(edges)):
+        adj.setdefault(s, []).append(d)
+    best = {(r, d, d): 1 for r in roots for d in adj.get(r, [])}
+    frontier = [k for k in best if k[2].split(":", 1)[0] not in excludes]
+    for h in range(2, max_hops + 1):
+        per_seed = {}
+        for r, s, n in frontier:
+            per_seed.setdefault((r, s), []).append(n)
+        new = {}
+        for (r, s), nodes in per_seed.items():
+            for n in sorted(nodes)[:cap]:
+                for d in adj.get(n, []):
+                    if (r, s, d) not in best:
+                        new[(r, s, d)] = h
+        best.update(new)
+        frontier = list(new)
+        if not frontier:
+            break
+    hops = {}
+    for (r, _s, n), h in best.items():
+        hops.setdefault((r, n), []).append(h)
+    return {k: (min(v), v.count(min(v))) for k, v in hops.items()}
+
+
+def test_frontier_cap_rounds_vs_reference(spark):
+    """frontier_cap=2 cuts most frontiers of these graphs: bounded_sssp_multi
+    and seeded_support (plain and path_k=1, with a hop-1 exclude) equal the
+    pure-Python capped delta rounds."""
+    rng = random.Random(2024)
+    edges = _random_graph(rng, n=10, m=100, chain_len=5)
+    roots = ["t0:n000", "t1:n004"]
+    roots_df = spark.createDataFrame([(r,) for r in roots], "root string")
+    weighted = [(s, d, round(rng.uniform(0.1, 2.0), 3)) for s, d, _ in edges]
+    w_df = spark.createDataFrame(
+        [(s, "e", d, w) for s, d, w in weighted],
+        "subj string, predicate string, obj string, weight double",
+    )
+    got = {
+        (r["root"], r["node"]): (r["cost"], r["hops"])
+        for r in bounded_sssp_multi(w_df, roots_df, max_hops=5, frontier_cap=2).collect()
+    }
+    assert got == _capped_sssp_reference(weighted, roots, 5, 2)
+
+    e_df = spark.createDataFrame(
+        [(s, p, d) for s, d, p in edges],
+        "subj string, predicate string, obj string",
+    )
+    ref = _capped_support_reference(edges, roots, 4, 2, ("t2",))
+    assert ref != _capped_support_reference(edges, roots, 4, 10_000, ("t2",))
+    for kwargs in ({}, {"path_k": 1}):
+        got = {
+            (r["root"], r["node"]): (r["distance"], r["support"])
+            for r in seeded_support(
+                e_df, roots_df, max_hops=4, frontier_cap=2,
+                hop1_expand_excludes=("t2",), **kwargs,
+            ).collect()
+        }
+        assert got == ref, kwargs
