@@ -34,39 +34,6 @@ from ..config import (
 # mentions: (url, mtype, text);  entities: FIXTURES.md §2 schema.
 
 
-def link_file_mentions(mentions: DataFrame, entities: DataFrame) -> DataFrame:
-    """J1/J3 for files: exact normalized-path equi-join → STRONG link.
-
-    Broadcast the inventory; the mention side streams.
-    Returns (url, entity_id, kind, weight).
-    """
-    files = entities.filter(F.col("kind") == "file").select(
-        "entity_id", F.col("file_path").alias("_path")
-    )
-    return (
-        mentions.filter(F.col("mtype") == "file")
-        .join(F.broadcast(files), F.col("text") == F.col("_path"))
-        .select(
-            "url",
-            "entity_id",
-            F.lit("file").alias("kind"),
-            F.lit(STRONG_CONNECTION).alias("weight"),
-        )
-    )
-
-
-def link_qualified_mentions(mentions: DataFrame, entities: DataFrame) -> DataFrame:
-    """J1 for dotted names: exact qualified-name join → NORMAL link."""
-    named = entities.filter(
-        F.col("kind").isin("method", "class", "global_var")
-    ).select("entity_id", "kind", F.col("name").alias("_name"))
-    return (
-        mentions.filter(F.col("mtype") == "import")
-        .join(F.broadcast(named), F.col("text") == F.col("_name"))
-        .select("url", "entity_id", "kind", F.lit(NORMAL_CONNECTION).alias("weight"))
-    )
-
-
 def link_call_mentions(mentions: DataFrame, entities: DataFrame) -> DataFrame:
     """J3/J4 for bare call/class names: short-name join → NORMAL link.
 

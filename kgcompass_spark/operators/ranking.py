@@ -17,6 +17,9 @@ carries a complete lexicographic tie-break key (SURVEY.md §4.3).
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -164,21 +167,17 @@ def rank_evidence_full_all(
     counting is JVM-side array intersections, and the rank window is
     partitioned by root (per-root sorts distribute across executors).
     """
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    # explicit functionType: `from __future__ import annotations` stringifies
-    # type hints, so signature inference can't see Iterator/pd here
-    def _terms_fn(batches):
+    # Iterator[Series] -> Iterator[DataFrame] infers SCALAR_ITER; the hints
+    # are strings under `from __future__ import annotations`, so Iterator
+    # and pd must be module-level names for get_type_hints to resolve them
+    def _terms_fn(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         for texts in batches:
             pairs = [issue_anchor_terms(t or "") for t in texts]
             yield pd.DataFrame(
                 {"exact": [p[0] for p in pairs], "lex": [p[1] for p in pairs]}
             )
 
-    _terms = pandas_udf(
-        _terms_fn, "exact array<string>, lex array<string>", PandasUDFType.SCALAR_ITER
-    )
+    _terms = F.pandas_udf(_terms_fn, "exact array<string>, lex array<string>")
 
     terms = issue_texts.select(
         F.concat(F.lit("issue:"), F.col("url")).alias("root"),

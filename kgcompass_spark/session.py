@@ -92,6 +92,19 @@ def get_spark(
         # reads it once per process, so it must be set before the session
         # starts.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Generated-class cache, sized to the package's plan set. Spark's
+        # default keeps 100 classes, LRU; one perfbench process compiles
+        # more distinct classes than that (seed 1, counted with
+        # CodegenMetrics: build 219, stream 173, graph 427 = 86 set-up +
+        # 242 first unit + 99 check, traced graph 490), so the cache
+        # evicted in a cycle and every warm graph unit recompiled ~255
+        # classes (Janino, 9-20 ms each). At 1000 (2x the largest count)
+        # a warm graph unit compiles none; perfbench graph wall_s medians
+        # went 11.6 -> 9.4 s and 9.4 -> 8.0 s in two sets of 10 interleaved
+        # pairs on a 4-core host (7/10 pairs faster in each set; CPU steal
+        # up to 28 s a run). A static conf: it must be set before the
+        # session starts.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # Pin the heap floor to the ceiling and the collector to G1: with
         # the default tiny -Xms the local-mode JVM spends the first minutes
         # resizing the heap, and identical plans were measured 2× apart in

@@ -1,4 +1,5 @@
-"""Driver-side cost of one perfbench unit: Spark jobs and py4j commands.
+"""Driver-side cost of one perfbench unit: Spark jobs, py4j commands and
+generated classes compiled.
 
     python3 scripts/plan_cost.py [--workload build|graph] [--seed N] [--reps K]
 
@@ -16,20 +17,27 @@ each unit it prints one JSON line:
   construct_py4j   py4j commands the driver sent while building the plan
   construct_s      wall time of plan construction
   write_s          wall time of the write
+  compiles         generated classes compiled during the unit
 
 ``--workload graph`` builds the perfbench ``graph`` inputs (a 60-page core
 KG with 3 issue roots, 60 spelling-variant chains) and runs its unit
 ``--reps`` times in three parts, each collected to the driver:
 ``evidence`` (``evidence_export_all``), ``related``
 (``ranked_related_all``) and ``canon`` (``fuzzy_canonical_mapping``). For
-each unit it prints one JSON line with ``<part>_jobs``, ``<part>_py4j``
-and ``<part>_s`` for each part, and ``unit_jobs``, the sum of the jobs.
+each unit it prints one JSON line with ``<part>_jobs``, ``<part>_py4j``,
+``<part>_compiles`` and ``<part>_s`` for each part, and ``unit_jobs``, the
+sum of the jobs.
 
 Jobs are read from the DAG scheduler's next job id. Py4j commands are
 counted by wrapping the gateway client's ``send_command``; the
 memory-delete commands that Python's garbage collector sends for dropped
 JVM references are not counted (their timing follows the collector, not
-the plan). The first unit warms the JVM; compare the later ones.
+the plan). Compiles are the count of Janino compilations the JVM has run
+(``CodegenMetrics.METRIC_COMPILATION_TIME``), driver and local-mode tasks
+alike: a generated class found in the codegen class cache
+(``spark.sql.codegen.cache.maxEntries``, set in ``get_spark``) is not
+compiled again, so a warm unit whose classes all fit in the cache reads 0.
+The first unit warms the JVM; compare the later ones.
 """
 
 from __future__ import annotations
@@ -68,10 +76,17 @@ class CommandCounter:
         client.send_command = counted
 
 
+def compiles(spark) -> int:
+    """Generated classes the JVM has compiled since it started."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def build_units(spark, work, args, scheduler, counter):
     wl = Build(spark, work, args.seed, SIZES["full"])
     wl.setup()
     for rep in range(args.reps):
+        k0 = compiles(spark)
         j0, c0, t0 = scheduler.nextJobId(), counter.n, time.perf_counter()
         out = build_kg(
             wl.pages, wl.entities, cutoff=CUTOFF, commits=wl.commits,
@@ -80,6 +95,7 @@ def build_units(spark, work, args, scheduler, counter):
         j1, c1, t1 = scheduler.nextJobId(), counter.n, time.perf_counter()
         out["triples"].write.mode("overwrite").parquet(wl.path("triples"))
         j2, t2 = scheduler.nextJobId(), time.perf_counter()
+        k2 = compiles(spark)
         for df in out["persisted"]:
             df.unpersist()
         print(json.dumps({
@@ -91,6 +107,7 @@ def build_units(spark, work, args, scheduler, counter):
             "construct_py4j": c1 - c0,
             "construct_s": round(t1 - t0, 3),
             "write_s": round(t2 - t1, 3),
+            "compiles": k2 - k0,
         }), flush=True)
 
 
@@ -111,11 +128,13 @@ def graph_units(spark, work, args, scheduler, counter):
     for rep in range(args.reps):
         line = {"rep": rep, "seed": args.seed}
         for name, run in parts.items():
+            k0 = compiles(spark)
             j0, c0, t0 = scheduler.nextJobId(), counter.n, time.perf_counter()
             run()
             line[f"{name}_jobs"] = scheduler.nextJobId() - j0
             line[f"{name}_py4j"] = counter.n - c0
             line[f"{name}_s"] = round(time.perf_counter() - t0, 3)
+            line[f"{name}_compiles"] = compiles(spark) - k0
         line["unit_jobs"] = sum(line[f"{name}_jobs"] for name in parts)
         print(json.dumps(line), flush=True)
 

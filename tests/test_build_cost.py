@@ -42,10 +42,11 @@ def test_build_kg_construction_job_budget(spark, inputs):
 
 
 @pytest.mark.parametrize("gate", [None, 0])
-def test_build_kg_persisted_frames_are_all_returned(spark, gate, monkeypatch):
+def test_build_kg_persisted_frames_are_all_returned(spark, gate, monkeypatch, cached_rdds):
     """Every frame build_kg persists is in ``out["persisted"]``: once the
-    caller unpersists them, the context's persistent RDDs are back to their
-    count before the call. ``gate=0`` takes the groupBy selection path."""
+    caller unpersists them, the context's cached RDDs (local checkpoints
+    aside) are back to their count before the call. ``gate=0`` takes the
+    groupBy selection path."""
     from kgcompass_spark.operators import context as ctx_mod
 
     if gate is not None:
@@ -53,13 +54,12 @@ def test_build_kg_persisted_frames_are_all_returned(spark, gate, monkeypatch):
     # fresh inputs: a plan another test already cached would be shared
     pages, entities, _, _ = corpus_dataframes(spark, n_pages=40)
     commits, docs, _ = context_corpus_dataframes(spark, n_pages=40)
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
+    before = cached_rdds()
     out = build_kg(
         pages, entities, cutoff=CUTOFF, commits=commits, docs=docs,
         persist=True, canonicalize=True,
     )
     assert out["triples"].count() > 0
-    assert jsc.getPersistentRDDs().size() > before
+    assert cached_rdds() > before
     _unpersist(out)
-    assert jsc.getPersistentRDDs().size() == before
+    assert cached_rdds() == before

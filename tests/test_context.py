@@ -4,7 +4,7 @@ goldens — extends the P/R gate to all 17 predicate pairs."""
 import pytest
 from pyspark.sql import functions as F
 
-from kgcompass_spark.config import PREDICATE_INVERSE
+from kgcompass_spark.config import NORMAL_CONNECTION, PREDICATE_INVERSE, STRONG_CONNECTION
 from kgcompass_spark.pipeline import build_kg
 from kgcompass_spark.sources.datagen import (
     CUTOFF,
@@ -231,16 +231,45 @@ def test_fused_selections_equal_standalone_paths(spark, full_corpus, gate, monke
     assert fused == standalone
 
 
+def link_file_mentions(mentions, entities):
+    """Reference J1/J3 for files: exact normalized-path join → STRONG link."""
+    files = entities.filter(F.col("kind") == "file").select(
+        "entity_id", F.col("file_path").alias("_path")
+    )
+    return (
+        mentions.filter(F.col("mtype") == "file")
+        .join(F.broadcast(files), F.col("text") == F.col("_path"))
+        .select(
+            "url",
+            "entity_id",
+            F.lit("file").alias("kind"),
+            F.lit(STRONG_CONNECTION).alias("weight"),
+        )
+    )
+
+
+def link_qualified_mentions(mentions, entities):
+    """Reference J1 for dotted names: exact qualified-name join → NORMAL link."""
+    named = entities.filter(
+        F.col("kind").isin("method", "class", "global_var")
+    ).select("entity_id", "kind", F.col("name").alias("_name"))
+    return (
+        mentions.filter(F.col("mtype") == "import")
+        .join(F.broadcast(named), F.col("text") == F.col("_name"))
+        .select("url", "entity_id", "kind", F.lit(NORMAL_CONNECTION).alias("weight"))
+    )
+
+
 def test_fused_dictionary_join_equals_standalone_resolvers(spark, full_corpus):
     """link_dictionary_mentions ≡ the union of the three standalone
     resolvers it fuses, as (url, entity_id, kind, weight) SETS (the fused
     form may repeat a row where the call groupBy collapsed duplicates —
-    absorbed by the pipeline MERGE; the set must match exactly)."""
+    absorbed by the pipeline MERGE; the set must match exactly). The file
+    and qualified-name resolvers above are references only; the call
+    resolver is the package's ``link_call_mentions``."""
     from kgcompass_spark.operators.linking import (
         link_call_mentions,
         link_dictionary_mentions,
-        link_file_mentions,
-        link_qualified_mentions,
     )
     from kgcompass_spark.pipeline import extract_mentions, prepare_pages
 
